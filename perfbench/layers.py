@@ -1,7 +1,7 @@
 """The traced run: per-layer metrics of one workload.
 
-Traced and untraced passes alternate inside one timed window, so
-``trace.overhead_pct`` compares passes run under the same box
+Traced and untraced passes alternate inside one timed window, after
+warm-up, so ``trace.overhead_pct`` compares passes run under the same box
 conditions. Every per-layer number is a per-pass total, reported as the
 median over the traced passes.
 """
@@ -76,20 +76,36 @@ COUNTS = tuple(k for k, u in UNITS.items() if u == "count")
 
 def _outermost(spans, layer: str, kind: str | None = None) -> int:
     """Calls into a layer from outside it (nested calls are one call)."""
-
-    def mine(s) -> bool:
-        return s is not None and s.layer == layer and (kind is None or s.kind == kind)
-
-    return sum(1 for s in spans if mine(s) and not mine(s.parent))
+    return sum(
+        1
+        for s in spans
+        if s.layer == layer
+        and (kind is None or s.kind == kind)
+        and (s.parent is None or s.parent.layer != layer)
+    )
 
 
 def _self(spans, layer: str, kind: str | None = None, attr: str = "self_s") -> float:
     return sum(getattr(s, attr) for s in spans if s.layer == layer and (kind is None or s.kind == kind))
 
 
+def _versioned_kinds(spans) -> None:
+    """A versioned-table call made inside another one counts toward the
+    outer call's kind: the write of a compaction is maintenance, the
+    manifest listing of a commit is commit."""
+    for s in spans:
+        if s.layer != "versioned":
+            continue
+        top = s
+        while top.parent is not None and top.parent.layer == "versioned":
+            top = top.parent
+        s.kind = top.kind
+
+
 def pass_metrics(p: dict, cpus: int) -> dict[str, float]:
     """Per-layer totals of one traced pass."""
     spans = p["spans"]
+    _versioned_kinds(spans)
     qs = [q for q in p["queries"] if "run" in q]
     build = {k: sum(q["build"][k] for q in qs) for k in qs[0]["build"]} if qs else {}
     run = {k: sum(q["run"][k] for q in qs) for k in qs[0]["run"]} if qs else {}
@@ -138,20 +154,48 @@ def pass_metrics(p: dict, cpus: int) -> dict[str, float]:
     }
 
 
-def self_time_violations(p: dict) -> list[str]:
-    """Queries whose spans' self times sum to more than the query's wall
-    time; self times partition the time under a query, so any excess
-    means spans overlapped or leaked across queries."""
-    by_qid: dict[str, float] = {}
-    for s in p["spans"]:
-        by_qid[s.qid] = by_qid.get(s.qid, 0.0) + s.self_s
+def _root(s):
+    while s.parent is not None:
+        s = s.parent
+    return s
+
+
+def span_violations(p: dict) -> list[str]:
+    """Checks of one traced pass's spans; each fails when spans overlap,
+    leak across queries or escape their query:
+
+    - no span's self time is below zero (its children overlapped each
+      other, or a callback-thread child outlived it);
+    - every span lies inside a query phase (a ``plans`` build or run
+      span), within that phase's start and end, and carries the phase's
+      query id;
+    - per query, the self times of the spans opened during its build
+      sum to at most its ``build_s``, those opened during its run to at
+      most its ``run_s``.
+    """
     bad = []
+    phase_self: dict[tuple[str, str], float] = {}
+    for s in p["spans"]:
+        where = f"{s.qid} {s.name}"
+        if s.self_s < -SELF_TIME_SLACK_S:
+            bad.append(f"{where}: self time {s.self_s:.4f}s < 0")
+        root = _root(s)
+        if root.layer != "plans":
+            bad.append(f"{where}: outside any query phase")
+            continue
+        if s.start < root.start or s.end > root.end + SELF_TIME_SLACK_S:
+            bad.append(f"{where}: outlives its {root.kind} phase")
+        if s.qid != root.qid:
+            bad.append(f"{where}: in a span tree of {root.qid}")
+        key = (s.qid, root.kind)
+        phase_self[key] = phase_self.get(key, 0.0) + s.self_s
     for q in p["queries"]:
         if "wall_s" not in q:
             continue
-        total = by_qid.get(q["qid"], 0.0)
-        if total > q["wall_s"] + SELF_TIME_SLACK_S:
-            bad.append(f"{q['qid']}: self {total:.4f}s > wall {q['wall_s']:.4f}s")
+        for kind in ("build", "run"):
+            total, limit = phase_self.get((q["qid"], kind), 0.0), q[f"{kind}_s"]
+            if total > limit + SELF_TIME_SLACK_S:
+                bad.append(f"{q['qid']}: {kind} self {total:.4f}s > {kind}_s {limit:.4f}s")
     return bad
 
 
@@ -225,12 +269,16 @@ def traced_run(run, seconds: float):
         if not p["traced"]:
             continue
         per_pass.append(pass_metrics(p, cpus))
-        violations += self_time_violations(p)
+        violations += span_violations(p)
     for v in violations:
-        print(f"SELF-TIME {v}", file=sys.stderr)
+        print(f"SPAN {v}", file=sys.stderr)
     metrics = {k: statistics.median(m[k] for m in per_pass) for k in per_pass[0]}
-    untraced = statistics.median(p["wall_s"] for p in passes if not p["traced"])
-    traced = statistics.median(p["wall_s"] for p in passes if p["traced"])
+    # Each complete group of four passes runs U T T U: its traced and
+    # its untraced passes sit at the same mean position, so a steady
+    # drift in pass time cancels out of the ratio.
+    groups = [passes[i : i + 4] for i in range(0, len(passes) - 3, 4)]
+    traced = sum(p["wall_s"] for g in groups for p in g if p["traced"])
+    untraced = sum(p["wall_s"] for g in groups for p in g if not p["traced"])
     metrics.update(calib)
     metrics["mem.peak_rss_mb"] = run.peak_rss_mb()
     metrics["session.start_s"] = run.start_s

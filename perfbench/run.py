@@ -11,9 +11,10 @@ the query order within every pass.
 
 A run has three parts:
 
-1. set-up: session start, then two warm-up passes; the first collects
+1. set-up: session start, then warm-up passes; the first collects
    every query's output and compares it with the query's DuckDB oracle
-   over the same tables (the comparison itself is not timed);
+   over the same tables (the comparison itself is not timed), and a
+   fixed number of ordinary passes follows;
 2. timed passes for ``--seconds``; with ``--trace 1`` traced and
    untraced passes alternate, and per-layer metrics come from the
    traced ones;
@@ -113,9 +114,10 @@ class Run:
         self.start_s = time.perf_counter() - t0
 
     def warm_and_check(self) -> None:
-        """Two warm-up passes. In the first, each query's output is
-        collected and compared with its oracle; only the Spark side is
-        timed (``warm_s``)."""
+        """Warm-up. The first pass collects each query's output and
+        compares it with its oracle; the workload's fixed number of
+        ordinary passes follows. Only the Spark side is timed
+        (``warm_s``)."""
         import duckdb
 
         from end_to_end_database_pipeline_project_spark.sources.catalog import TABLES
@@ -135,6 +137,7 @@ class Run:
                 self._fail(name, "raised", traceback.format_exc(limit=3))
                 continue
             self.warm_s += time.perf_counter() - t0
+            print(f"checked pass: {name} {time.perf_counter() - t0:.3f}s", file=sys.stderr)
             if name in self.ORACLES:
                 errs = compare(name, got, con.sql(self.ORACLES[name]).df())
             else:
@@ -142,11 +145,10 @@ class Run:
             if errs:
                 self._fail(name, "wrong output", "; ".join(errs))
         con.close()
-        # The first pass is cold; a second, timed like the window's passes,
-        # takes most of what is left of the warm-up curve out of the window.
         t0 = time.perf_counter()
-        self.run_pass(-1)
+        walls = [self.run_pass(-1 - i)["wall_s"] for i in range(WORKLOADS[self.workload]["warm_passes"])]
         self.warm_s += time.perf_counter() - t0
+        print("warm-up walls:", " ".join(f"{w:.3f}" for w in walls), file=sys.stderr)
 
     def for_workload(self, workload: str) -> "Run":
         """A run of another workload on this run's session and fixture."""
@@ -190,13 +192,17 @@ class Run:
         rec.update(build_s=t1 - t0, run_s=t2 - t1, wall_s=t2 - t0)
         return rec
 
-    def run_pass(self, index: int, tracer=None, counters=None) -> dict:
+    def run_pass(self, index: int, tracer=None, counters=None, stop_at: float | None = None) -> dict:
+        """The workload's queries in the seeded order; with `stop_at`,
+        the pass ends after the first query that finishes past it."""
         t0 = time.perf_counter()
         queries = []
         for name in self.order:
             if tracer is not None:
                 tracer.qid = f"{self.workload}:{index}:{name}"
             queries.append(self.run_query(name, tracer, counters))
+            if stop_at is not None and time.perf_counter() >= stop_at:
+                break
         p = {"index": index, "wall_s": time.perf_counter() - t0, "queries": queries, "traced": tracer is not None}
         if tracer is not None:
             # Spark's counters are read after the pass's clock stops.
@@ -219,21 +225,29 @@ class Run:
             tracer.enabled = False
 
     def timed_passes(self, seconds: float, tracer=None, counters=None):
-        """Closed loop of passes for `seconds`: a new pass starts while
-        time is left, so the window is always filled. With a tracer, traced and
-        untraced passes alternate in the order U T T U U T T U ..., so a
-        steady drift in pass time weighs on both sides alike."""
+        """Closed loop for `seconds`.
+
+        Untraced, the loop stops after the first query that ends past
+        the window, once every query has run at least once.
+
+        Traced, whole passes run (per-layer numbers are per-pass totals)
+        while time is left and until at least one group of four has run;
+        traced and untraced passes alternate in the order
+        U T T U U T T U ..., so a steady drift in pass time weighs on both
+        sides alike."""
         passes: list[dict] = []
         t0 = time.perf_counter()
         index = 0
         while True:
             if tracer is not None and index % 4 in (1, 2):
                 p = self.traced_pass(index, tracer, counters)
+            elif tracer is None and index > 0:
+                p = self.run_pass(index, stop_at=t0 + seconds)
             else:
                 p = self.run_pass(index)
             passes.append(p)
             index += 1
-            need_more = tracer is not None and index < 2
+            need_more = tracer is not None and index < 4
             if not need_more and time.perf_counter() - t0 >= seconds:
                 return passes
 
@@ -311,7 +325,7 @@ def main(argv: list[str] | None = None) -> int:
             metrics, units, ok = layers.traced_run(run, args.seconds)
         else:
             passes = run.timed_passes(args.seconds)
-            print("pass walls:", " ".join(f"{p['wall_s']:.3f}" for p in passes), file=sys.stderr)
+            print("window pass walls:", " ".join(f"{p['wall_s']:.3f}" for p in passes), file=sys.stderr)
             metrics, units, ok = end_to_end(run, passes), UNITS, True
     finally:
         run.stop()

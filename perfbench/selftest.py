@@ -6,8 +6,8 @@ Run from the repository root. In one session, on the seeded fixture
 (the size of the repository's sf0.001 tables), each workload is warmed
 up and output-checked, then run twice traced. Every count metric (jobs,
 stages, tasks, commits, reads, calls, materializations) must repeat
-exactly between the two passes, no query may fail, and the self times
-of the spans under each query must sum to no more than its wall time.
+exactly between the two passes, no query may fail, and every span check
+of ``layers.span_violations`` must pass.
 Exits 1 and names the offending metric or query otherwise.
 """
 
@@ -19,7 +19,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from perfbench.layers import COUNTS, pass_metrics, self_time_violations, tracing  # noqa: E402
+from perfbench.layers import COUNTS, pass_metrics, span_violations, tracing  # noqa: E402
 from perfbench.run import ROOT, Run, prepare_env, remove_work_dir  # noqa: E402
 from perfbench.workloads import ALL  # noqa: E402
 
@@ -45,7 +45,7 @@ def main(argv: list[str] | None = None) -> int:
             for k in COUNTS:
                 if ma[k] != mb[k]:
                     problems.append(f"{workload}: {k} {ma[k]} then {mb[k]}")
-            problems += [f"{workload}: {v}" for v in self_time_violations(a) + self_time_violations(b)]
+            problems += [f"{workload}: {v}" for v in span_violations(a) + span_violations(b)]
             if run.failed:
                 problems.append(f"{workload}: error_rate {run.failed}/{run.attempted}")
             print(workload, {k: ma[k] for k in COUNTS})
