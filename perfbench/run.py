@@ -15,7 +15,9 @@ A run has three parts:
    every query's output and compares it with the query's DuckDB oracle
    over the same tables (the comparison itself is not timed), and a
    fixed number of ordinary passes follows;
-2. timed passes for ``--seconds``; with ``--trace 1`` traced and
+2. timed passes for ``--seconds``: with ``--trace 0`` each is followed
+   by a reference pass (``reference.py``), and ``pass_rel`` is a pass's
+   time over the reference pass's; with ``--trace 1`` traced and
    untraced passes alternate, and per-layer metrics come from the
    traced ones;
 3. shutdown of the session and its JVM.
@@ -45,7 +47,11 @@ ROOT = os.getcwd()
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from perfbench import layers  # noqa: E402
+from perfbench.reference import reference_pass  # noqa: E402
 from perfbench.workloads import WORKLOADS  # noqa: E402
+
+
+STATUS_RETAINED = "100000"
 
 
 def _cpus() -> int:
@@ -109,6 +115,13 @@ class Run:
             extra_conf={
                 "spark.driver.extraJavaOptions": f"-Djava.io.tmpdir={os.environ['TMPDIR']}",
                 "spark.sql.warehouse.dir": os.path.join(self.work, "warehouse"),
+                # A traced pass reads every stage its jobs list, skipped ones
+                # too, from the status stores; with the default limit of
+                # 1,000 a run's early stages are dropped before later jobs
+                # that reuse their shuffles are read.
+                "spark.ui.retainedJobs": STATUS_RETAINED,
+                "spark.ui.retainedStages": STATUS_RETAINED,
+                "spark.sql.ui.retainedExecutions": STATUS_RETAINED,
             },
         )
         self.start_s = time.perf_counter() - t0
@@ -116,7 +129,8 @@ class Run:
     def warm_and_check(self) -> None:
         """Warm-up. The first pass collects each query's output and
         compares it with its oracle; the workload's fixed number of
-        ordinary passes follows. Only the Spark side is timed
+        ordinary passes follows, and a reference pass runs after each
+        pass so it is warm too. Only the workload's Spark side is timed
         (``warm_s``)."""
         import duckdb
 
@@ -145,10 +159,16 @@ class Run:
             if errs:
                 self._fail(name, "wrong output", "; ".join(errs))
         con.close()
-        t0 = time.perf_counter()
-        walls = [self.run_pass(-1 - i)["wall_s"] for i in range(WORKLOADS[self.workload]["warm_passes"])]
-        self.warm_s += time.perf_counter() - t0
+        walls, refs = [], [self.reference_s()]
+        for i in range(WORKLOADS[self.workload]["warm_passes"]):
+            walls.append(self.run_pass(-1 - i)["wall_s"])
+            refs.append(self.reference_s())
+        self.warm_s += sum(walls)
         print("warm-up walls:", " ".join(f"{w:.3f}" for w in walls), file=sys.stderr)
+        print("warm-up reference walls:", " ".join(f"{w:.3f}" for w in refs), file=sys.stderr)
+
+    def reference_s(self) -> float:
+        return reference_pass(self.spark, self.sf_dir, self.work)
 
     def for_workload(self, workload: str) -> "Run":
         """A run of another workload on this run's session and fixture."""
@@ -192,17 +212,14 @@ class Run:
         rec.update(build_s=t1 - t0, run_s=t2 - t1, wall_s=t2 - t0)
         return rec
 
-    def run_pass(self, index: int, tracer=None, counters=None, stop_at: float | None = None) -> dict:
-        """The workload's queries in the seeded order; with `stop_at`,
-        the pass ends after the first query that finishes past it."""
+    def run_pass(self, index: int, tracer=None, counters=None) -> dict:
+        """The workload's queries in the seeded order."""
         t0 = time.perf_counter()
         queries = []
         for name in self.order:
             if tracer is not None:
                 tracer.qid = f"{self.workload}:{index}:{name}"
             queries.append(self.run_query(name, tracer, counters))
-            if stop_at is not None and time.perf_counter() >= stop_at:
-                break
         p = {"index": index, "wall_s": time.perf_counter() - t0, "queries": queries, "traced": tracer is not None}
         if tracer is not None:
             # Spark's counters are read after the pass's clock stops.
@@ -225,13 +242,12 @@ class Run:
             tracer.enabled = False
 
     def timed_passes(self, seconds: float, tracer=None, counters=None):
-        """Closed loop for `seconds`.
+        """Closed loop of whole passes for `seconds`.
 
-        Untraced, the loop stops after the first query that ends past
-        the window, once every query has run at least once.
+        Untraced, each pass is followed by a reference pass
+        (``reference.py``), and at least two passes run.
 
-        Traced, whole passes run (per-layer numbers are per-pass totals)
-        while time is left and until at least one group of four has run;
+        Traced, passes run until at least one group of four has run;
         traced and untraced passes alternate in the order
         U T T U U T T U ..., so a steady drift in pass time weighs on both
         sides alike."""
@@ -241,13 +257,13 @@ class Run:
         while True:
             if tracer is not None and index % 4 in (1, 2):
                 p = self.traced_pass(index, tracer, counters)
-            elif tracer is None and index > 0:
-                p = self.run_pass(index, stop_at=t0 + seconds)
             else:
                 p = self.run_pass(index)
+            if tracer is None:
+                p["ref_s"] = self.reference_s()
             passes.append(p)
             index += 1
-            need_more = tracer is not None and index < 4
+            need_more = index < (4 if tracer is not None else 2)
             if not need_more and time.perf_counter() - t0 >= seconds:
                 return passes
 
@@ -282,28 +298,22 @@ class Run:
 
 
 def end_to_end(run: Run, passes: list[dict]) -> dict[str, float]:
-    """``pass_s`` is a typical pass: the sum over the workload's queries of
-    each query's median latency in the window. One slow sample (a GC
-    pause, a streaming trigger that waits a poll interval) moves it much
-    less than it moves the median of a handful of whole-pass times."""
-    by_query: dict[str, list[float]] = {}
+    """``pass_rel`` is the median over the window's passes of a pass's
+    wall time over the wall time of the reference pass that follows it:
+    the workload's cost in units of a fixed piece of Spark work run on
+    the same box at the same time."""
     for p in passes:
-        for q in p["queries"]:
-            if "wall_s" in q:
-                by_query.setdefault(q["name"], []).append(q["wall_s"])
-    for name, lat in by_query.items():
-        print(f"{name}: " + " ".join(f"{x:.3f}" for x in lat), file=sys.stderr)
+        lat = " ".join(f"{q['name']}={q['wall_s']:.3f}" for q in p["queries"] if "wall_s" in q)
+        print(f"pass {p['index']}: {p['wall_s']:.3f}s reference {p['ref_s']:.3f}s; {lat}", file=sys.stderr)
     return {
         "setup_s": run.start_s + run.warm_s,
-        "pass_s": sum(statistics.median(lat) for lat in by_query.values()),
-        "query_p50_s": statistics.median(x for lat in by_query.values() for x in lat),
+        "pass_rel": statistics.median(p["wall_s"] / p["ref_s"] for p in passes),
     }
 
 
 UNITS = {
     "setup_s": "s",
-    "pass_s": "s",
-    "query_p50_s": "s",
+    "pass_rel": "ratio",
 }
 
 
@@ -325,7 +335,6 @@ def main(argv: list[str] | None = None) -> int:
             metrics, units, ok = layers.traced_run(run, args.seconds)
         else:
             passes = run.timed_passes(args.seconds)
-            print("window pass walls:", " ".join(f"{p['wall_s']:.3f}" for p in passes), file=sys.stderr)
             metrics, units, ok = end_to_end(run, passes), UNITS, True
     finally:
         run.stop()

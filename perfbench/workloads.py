@@ -42,7 +42,7 @@ WORKLOADS: dict[str, dict] = {
             "multimodal_jpeg_decode",
             "multimodal_adpcm_decode",
         ],
-        "warm_passes": 3,
+        "warm_passes": 2,
     },
     "versioned_lifecycle": {
         "why": (
