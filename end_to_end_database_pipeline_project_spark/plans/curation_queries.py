@@ -177,11 +177,13 @@ def bigram_lm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("w1", "w2", nll.alias("nll"))
     )
     # r12 (guide §3.1, found by the sf1 spot bench): pin the scorer
-    # join to sort-merge — the checkpointed occurrence stream carries
-    # no stats, and past the broadcast threshold for the MODEL side
-    # the planner flipped to broadcasting the OCCURRENCE side (the big
-    # one; serial locally, an OOM at scale). Merge shuffles both sides
-    # by (w1, w2) and spills gracefully — the 1000-executor shape.
+    # join to a shuffled hash join with the MODEL as build side — the
+    # checkpointed occurrence stream carries no stats, and past the
+    # broadcast threshold for the model the planner flipped to
+    # broadcasting the OCCURRENCE side (the big one; serial locally,
+    # an OOM at scale). Both sides shuffle by (w1, w2); each task
+    # holds only its partition of the model in a hash map, which does
+    # not spill, so the model partitions must fit task memory.
     return (
         bge.join(model.hint("shuffle_hash"), ["w1", "w2"])
         .groupBy("doc_id")
@@ -279,8 +281,9 @@ def kneser_ney_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(t))
         .select("w1", "w2", (-F.log(p_kn)).alias("nll_kn"))
     )
-    # r12: same deliberate sort-merge pin as bigram_lm_scores (the
-    # planner must never broadcast the occurrence stream)
+    # r12: same deliberate shuffled-hash pin (model as build side) as
+    # bigram_lm_scores (the planner must never broadcast the
+    # occurrence stream)
     return (
         bge.join(model.hint("shuffle_hash"), ["w1", "w2"])
         .groupBy("doc_id")
@@ -2011,8 +2014,9 @@ def doremi_proxy_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nll = -F.log((F.col("c2") + 1) / (F.col("c1") + F.col("vsize")))
     per_doc = (
-        # r12: same sort-merge pin as bigram_lm_scores — never let the
-        # planner broadcast the stats-less occurrence stream
+        # r12: same shuffled-hash pin as bigram_lm_scores (bigram
+        # counts as build side) — never let the planner broadcast the
+        # stats-less occurrence stream
         bge.join(bc.hint("shuffle_hash"), ["w1", "w2"])
         .join(uc, ["w1"])
         .crossJoin(F.broadcast(vsize))

@@ -648,7 +648,9 @@ SELECT 'compacted', n_rows, revenue FROM y2000""",
 def versioned_pruned_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Manifest-stats data skipping + compaction on the versioned
     table: the chain commits carry per-commit [min, max] of
-    ``o_orderdate`` (one extra aggregate at write time), so a reader
+    ``o_orderdate`` (a session-timezone timestamp, written as INT96
+    without footer stats, so each commit runs one extra
+    ``groupBy(input_file_name())`` aggregate at write time), so a reader
     asking for one year's slice skips every other commit directory
     WITHOUT listing or opening a file in it — data skipping from the
     commit log, one level above parquet footer pruning (the
@@ -1496,9 +1498,9 @@ def versioned_file_skipping_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     buckets in hive dirs + in-partition sort (the MergeTree ORDER BY
     analog at the file level, clickhouse_etl.py:55-56; sampled-boundary
     range repartitioning is banned in registered plans) and the
-    manifest records each FILE's [min, max] (one
-    ``groupBy(input_file_name())`` aggregate at commit time —
-    metadata-sized). A key-slice read then opens ONLY
+    manifest records each FILE's [min, max] (read from the staged
+    parquet footers at commit time — no extra Spark job). A key-slice
+    read then opens ONLY
     the files whose recorded ranges intersect the slice:
     ``files_skipped`` is computed from the plan's actual inputFiles
     and must be TRUE. The same per-file skipping works through the

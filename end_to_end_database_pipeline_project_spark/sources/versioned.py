@@ -444,12 +444,120 @@ def _release_commit_lock(fd: int) -> None:
 
 
 def _rel_staged_file(uri: str, staging: str) -> str:
-    """input_file_name URI → path relative to the staged dir (the
-    manifest's file key must survive the rename to ``v=N``)."""
+    """input_file_name URI → path relative to the staged dir, as it is
+    on disk (hive-escaped): the manifest's file key, which survives the
+    rename to ``v=N``."""
     from urllib.parse import unquote, urlparse
 
     p = unquote(urlparse(uri).path)
     return os.path.relpath(p, os.path.abspath(staging)).replace(os.sep, "/")
+
+
+# a footer that cannot give a column's exact min/max
+_INEXACT = object()
+
+
+def _footer_type(dt):
+    """The Python type a parquet footer's min/max decodes to when it
+    is exactly Spark's own ``min``/``max`` for a column of Spark type
+    ``dt``, else None. Session-timezone timestamps are written as
+    INT96 (no footer stats); float/double footers order NaN and -0.0
+    unlike Spark; a collated string does not order by bytes."""
+    import datetime
+    import decimal
+
+    from pyspark.sql import types as T
+
+    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return int
+    if isinstance(dt, T.BooleanType):
+        return bool
+    if isinstance(dt, T.DateType):
+        return datetime.date
+    if isinstance(dt, T.TimestampNTZType):
+        return datetime.datetime
+    if isinstance(dt, T.DecimalType):
+        return decimal.Decimal
+    if isinstance(dt, T.StringType) and dt.collation == "UTF8_BINARY":
+        return str
+    return None
+
+
+def _chunk_min_max(chunk, rows: int, dt, want):
+    """One row group's (min, max) for a column chunk as Spark would
+    collect them; None when every value is NULL; ``_INEXACT`` when the
+    footer lacks them (parquet-java drops min/max over 4 KB)."""
+    import decimal
+
+    st = chunk.statistics
+    if st is None or not st.has_null_count:
+        return _INEXACT
+    if st.null_count == rows:
+        return None
+    if not st.has_min_max:
+        return _INEXACT
+    if want is decimal.Decimal:
+        # unscaled integer (INT32/INT64) or big-endian two's complement
+        # bytes; a string-built Decimal is exact at any precision
+        def dec(raw):
+            if isinstance(raw, bytes):
+                raw = int.from_bytes(raw, "big", signed=True)
+            return decimal.Decimal(f"{raw}e-{dt.scale}")
+
+        return dec(st.min_raw), dec(st.max_raw)
+    lo, hi = st.min, st.max
+    if type(lo) is not want or type(hi) is not want:
+        return _INEXACT
+    return lo, hi
+
+
+def _staged_footers(staged: str, types: dict) -> list:
+    """Every ``part-*.parquet`` file under a staged dir, read from its
+    footer alone (no Spark job): ``(rel_path, rows, {col: (min, max)})``
+    with ``rel_path`` as on disk (hive-escaped) relative to ``staged``.
+    ``types`` maps each stats column to its Spark type (None when the
+    written schema lacks it); a column's value is (None, None) when all
+    NULL and ``_INEXACT`` when the footers cannot give it exactly (also
+    for columns not stored in the file, e.g. partition columns)."""
+    import pyarrow.parquet as pq
+
+    out = []
+    for root, _dirs, files in sorted(os.walk(staged)):
+        for f in sorted(files):
+            if not (f.startswith("part-") and f.endswith(".parquet")):
+                continue
+            fp = os.path.join(root, f)
+            md = pq.read_metadata(fp)
+            mm = {}
+            if md.num_rows:
+                first = md.row_group(0)
+                idx = {
+                    first.column(j).path_in_schema: j
+                    for j in range(first.num_columns)
+                }
+                for c, dt in types.items():
+                    mm[c] = _file_min_max(md, idx.get(c), dt)
+            rel = os.path.relpath(fp, staged).replace(os.sep, "/")
+            out.append((rel, md.num_rows, mm))
+    return out
+
+
+def _file_min_max(md, j, dt):
+    """A file's (min, max) for column index ``j`` over its row groups
+    (see ``_staged_footers``)."""
+    want = _footer_type(dt)
+    if j is None or want is None:
+        return _INEXACT
+    lo = hi = None
+    for g in range(md.num_row_groups):
+        rg = md.row_group(g)
+        v = _chunk_min_max(rg.column(j), rg.num_rows, dt, want)
+        if v is _INEXACT:
+            return _INEXACT
+        if v is not None:
+            lo = v[0] if lo is None else min(lo, v[0])
+            hi = v[1] if hi is None else max(hi, v[1])
+    return lo, hi
 
 
 def _file_overlaps(entry: dict, rel_file: str, col: str, lo, hi) -> bool:
@@ -559,6 +667,34 @@ def _partition_dir_overlaps(rel_dir: str, col: str, lo, hi) -> bool:
     return lo <= val <= hi  # type: ignore[operator]
 
 
+def _aggregate_file_stats(
+    df: DataFrame, staging: str, rel_files: list, cols: list
+) -> dict:
+    """Per-file ``{col: (min, max)}`` for ``cols`` from one Spark
+    ``groupBy(input_file_name())`` aggregate over the listed staged
+    files — the fallback for columns whose footers are not exact."""
+    from pyspark.sql import functions as F
+
+    aggs = []
+    for c in cols:
+        aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
+    # explicit schema and file list: no footer inference, and no
+    # listing of the (hidden) _staging-* dir
+    written = (
+        df.sparkSession.read.schema(df.schema)
+        .option("basePath", staging)
+        .parquet(*[os.path.join(staging, rel) for rel in rel_files])
+    )
+    return {
+        _rel_staged_file(r["__file"], staging): {
+            c: (r[f"__min_{c}"], r[f"__max_{c}"]) for c in cols
+        }
+        for r in written.groupBy(F.input_file_name().alias("__file"))
+        .agg(*aggs)
+        .collect()
+    }
+
+
 def _commit(
     df: DataFrame,
     path: str,
@@ -583,13 +719,17 @@ def _commit(
     only read the manifest).
 
     ``stats_cols`` records BOTH commit-level and PER-FILE min/max for
-    the named columns (one ``groupBy(input_file_name())`` aggregate
-    over the just-written files; the commit range rolls up from the
-    bounded per-file rows) — the data-skipping index: a chain read or
+    the named columns — the data-skipping index: a chain read or
     incremental scan with a ``prune`` range skips whole commit
     directories, and WITHIN a surviving commit opens only the files
     whose recorded ranges intersect the slice (Delta's stats-per-file;
     decisive when the commit is range-clustered on the pruned column).
+    Row counts and per-file min/max come from the staged files' parquet
+    footers, so a commit costs its one write job; only stats columns
+    whose footers cannot give an exact value (``_footer_type``: session
+    timestamps, float/double, strings over 4 KB, partition columns) run
+    one ``groupBy(input_file_name())`` aggregate over the staged files.
+    The commit range rolls up from the per-file values driver-side.
 
     ``partition_by`` lays the commit out hive-partitioned (the
     MergeTree ``ORDER BY (timestamp, station_id)`` analog,
@@ -600,8 +740,6 @@ def _commit(
     live file's footer."""
     import shutil
     import uuid
-
-    from pyspark.sql import functions as F
 
     reserved = {
         "version",
@@ -628,23 +766,23 @@ def _commit(
             # schema-bearing empty file instead (no partition metadata)
             df.limit(0).write.mode("overwrite").parquet(staging)
             partition_by = ()
-        # explicit schema: skips footer inference and keeps an empty
-        # commit resolvable
-        written = df.sparkSession.read.schema(df.schema).parquet(staging)
-        # ONE aggregate computes row count and PER-FILE min/max (the
-        # Delta stats-per-file design): grouping by input_file_name is
-        # bounded by the commit's file count, so the collect is
-        # metadata-sized. Commit-level ranges roll up from the file
-        # rows driver-side.
-        aggs = [F.count(F.lit(1)).alias("__rows")]
-        for c in stats_cols:
-            aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
-        per_file = (
-            written.groupBy(F.input_file_name().alias("__file"))
-            .agg(*aggs)
-            .collect()
+        types = {f.name: f.dataType for f in df.schema.fields}
+        footers = _staged_footers(
+            staging, {c: types.get(c) for c in stats_cols}
         )
-        rows = sum(r["__rows"] for r in per_file)
+        rows = sum(n for _rel, n, _mm in footers)
+        # files with no rows get no file_stats entry
+        per_file = {rel: mm for rel, n, mm in footers if n}
+        inexact = [
+            c
+            for c in stats_cols
+            if any(mm[c] is _INEXACT for mm in per_file.values())
+        ]
+        if inexact:
+            for rel, mm in _aggregate_file_stats(
+                df, staging, list(per_file), inexact
+            ).items():
+                per_file[rel].update(mm)
         extra = dict(meta)
         if partition_by:
             extra["partition_by"] = list(partition_by)
@@ -653,22 +791,21 @@ def _commit(
         if stats_cols and per_file:
             stats = {}
             for c in stats_cols:
-                los = [r[f"__min_{c}"] for r in per_file if r[f"__min_{c}"] is not None]
-                his = [r[f"__max_{c}"] for r in per_file if r[f"__max_{c}"] is not None]
+                los = [mm[c][0] for mm in per_file.values() if mm[c][0] is not None]
+                his = [mm[c][1] for mm in per_file.values() if mm[c][1] is not None]
                 stats[c] = {
                     "min": _stat_value(min(los)) if los else None,
                     "max": _stat_value(max(his)) if his else None,
                 }
-        if stats_cols and per_file:
             extra["file_stats"] = {
-                _rel_staged_file(r["__file"], staging): {
+                rel: {
                     c: {
-                        "min": _stat_value(r[f"__min_{c}"]),
-                        "max": _stat_value(r[f"__max_{c}"]),
+                        "min": _stat_value(mm[c][0]),
+                        "max": _stat_value(mm[c][1]),
                     }
                     for c in stats_cols
                 }
-                for r in per_file
+                for rel, mm in per_file.items()
             }
         return _publish_staged(
             path,
@@ -962,7 +1099,8 @@ class StagedSlices:
     ):
         self.path = path
         self._staging = staging
-        self._slices = slices  # name -> [(abs_path, rel_dir), ...]
+        # name -> [(abs_path, rel_dir, footer rows), ...]
+        self._slices = slices
         self._schema = schema  # pyarrow schema for empty slices
         self._partition_by = tuple(partition_by)
 
@@ -981,14 +1119,16 @@ class StagedSlices:
             os.makedirs(self._staging, exist_ok=True)
             f = os.path.join(self._staging, f"part-{uuid.uuid4().hex}.parquet")
             pq.write_table(self._schema.empty_table(), f)
-            files = [(f, "")]
-        rows = sum(pq.read_metadata(f).num_rows for f, _rel in files)
+            files = [(f, "", 0)]
+        rows = sum(n for _f, _rel, n in files)
         meta = dict(meta or {})
-        dirs = sorted({rel for _f, rel in files if rel})
+        dirs = sorted({rel for _f, rel, _n in files if rel})
         if self._partition_by and dirs:
             meta["partition_by"] = list(self._partition_by)
             meta["partition_dirs"] = dirs
-        ver = adopt_staged_files(self.path, files, mode, rows, meta=meta)
+        ver = adopt_staged_files(
+            self.path, [(f, rel) for f, rel, _n in files], mode, rows, meta=meta
+        )
         if not self._slices:
             shutil.rmtree(self._staging, ignore_errors=True)
         return ver
@@ -1002,24 +1142,34 @@ def stage_slices(
 ) -> StagedSlices:
     """Stage SEVERAL pending commits' data with ONE Spark write job
     (r12, the batched scaffolding writer): ``slices`` is a list of
-    ``(name, condition)`` pairs with pairwise-DISJOINT conditions —
-    each input row lands in the slice whose condition it satisfies
-    (rows matching none are dropped, exactly like writing each
-    ``df.where(cond)`` separately). The job partitions by a synthetic
-    ``__slice`` tag (plus ``partition_by``, which then rides the
-    manifest exactly as ``write_version(partition_by=...)`` records
-    it), so an N-commit chain built from one source frame costs one
-    write job + N manifest adoptions instead of N write jobs + N
-    row-count jobs — per-slice row counts come from the staged parquet
-    footers, no Spark action. Content per committed version is
-    IDENTICAL to the sequential ``write_version``/``append_version``
-    calls it replaces (same rows, same hive layout, same manifest
-    fields); pinned by tests/test_versioned.py::test_stage_slices_*.
+    ``(name, condition)`` pairs. Conditions resolve FIRST-MATCH-WINS
+    (the tag is one ``F.when`` chain): each input row lands only in the
+    earliest listed slice whose condition it satisfies, and rows
+    matching none are dropped. With pairwise-disjoint conditions that
+    is exactly writing each ``df.where(cond)`` separately; overlapping
+    conditions are NOT equivalent to those sequential writes. The job
+    partitions by a synthetic ``__slice`` tag (plus ``partition_by``,
+    which then rides the manifest exactly as
+    ``write_version(partition_by=...)`` records it), so an N-commit
+    chain built from one source frame costs one write job + N manifest
+    adoptions instead of N write jobs. Per-file row counts come from
+    the staged parquet footers (``_staged_footers``), no Spark action.
+    Spark hive-escapes the ``__slice=`` directory names on disk, so
+    they map back to slice names by unquoting; if the footers' row
+    total over all slices differs from the rows staged (a directory
+    that maps back to no name), the call raises instead of committing
+    short versions. Content per committed version is IDENTICAL to the
+    sequential ``write_version``/``append_version`` calls it replaces
+    (same rows, same hive layout, same manifest fields); pinned by
+    tests/test_versioned.py::test_stage_slices_*.
 
     Commits that need per-commit stats (``stats_cols``), tombstones
     and upserts keep the sequential paths — only plain data commits
     batch."""
+    import posixpath
+    import shutil
     import uuid
+    from urllib.parse import unquote
 
     from pyspark.sql import functions as F
     from pyspark.sql.pandas.types import to_arrow_schema
@@ -1028,8 +1178,6 @@ def stage_slices(
     staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
     tag = None
     for name, cond in slices:
-        if "/" in name or "=" in name:
-            raise ValueError(f"slice name {name!r} must be hive-path-safe")
         tag = (
             F.when(cond, F.lit(name))
             if tag is None
@@ -1042,14 +1190,24 @@ def stage_slices(
         "__slice", *partition_by
     ).parquet(staging)
     out: dict = {name: [] for name, _c in slices}
-    for name in out:
-        sdir = os.path.join(staging, f"__slice={name}")
-        for root, _dirs, files in os.walk(sdir):
-            rel = os.path.relpath(root, sdir)
-            rel = "" if rel == "." else rel.replace(os.sep, "/")
-            for f in sorted(files):
-                if f.startswith("part-") and f.endswith(".parquet"):
-                    out[name].append((os.path.join(root, f), rel))
+    staged_rows = matched = 0
+    for rel, n, _mm in _staged_footers(staging, {}):
+        top, _, rest = rel.partition("/")
+        key, eq, raw = top.partition("=")
+        name = unquote(raw) if eq and key == "__slice" else None
+        staged_rows += n
+        if name in out:
+            out[name].append(
+                (os.path.join(staging, rel), posixpath.dirname(rest), n)
+            )
+            matched += n
+    if matched != staged_rows:
+        shutil.rmtree(staging, ignore_errors=True)
+        raise ValueError(
+            f"stage_slices staged {staged_rows} rows but only {matched} "
+            f"map back to the slice names {sorted(out)} — a slice name "
+            "that Spark cannot round-trip as a partition value (e.g. '')"
+        )
     schema = to_arrow_schema(df.schema)
     return StagedSlices(path, staging, out, schema, partition_by)
 

@@ -2324,3 +2324,236 @@ def test_stage_slices_all_empty_input_format_readable(spark, tmp_path):
     )
     assert fmt.count() == 0
     assert V.read_version(spark, path).count() == 0
+
+
+def test_stage_slices_escaped_slice_names_keep_every_row(spark, tmp_path):
+    """Spark hive-escapes partition values on disk (``even:0`` stages
+    under ``__slice=even%3A0``): every slice must still find its files,
+    so no committed version silently loses rows."""
+    df = spark.range(10).selectExpr("id AS x")
+    path = str(tmp_path / "esc")
+    staged = V.stage_slices(
+        df,
+        path,
+        [("even:0", F.col("x") % 2 == 0), ("odd/1 b", F.col("x") % 2 == 1)],
+    )
+    staged.commit("even:0", "full")
+    staged.commit("odd/1 b", "append")
+    assert [e["rows"] for e in V.versions(path)] == [5, 5]
+    assert sorted(r.x for r in V.read_version(spark, path, 1).collect()) == [
+        0, 2, 4, 6, 8
+    ]
+    assert sorted(r.x for r in V.read_version(spark, path).collect()) == list(
+        range(10)
+    )
+
+
+def test_stage_slices_unmatched_staged_rows_fail_loudly(spark, tmp_path):
+    """Rows staged under a directory that maps back to no slice name
+    (an empty-string name lands in the hive default partition) fail
+    the staging call instead of committing short versions."""
+    import pytest
+
+    df = spark.range(10).selectExpr("id AS x")
+    path = str(tmp_path / "lost")
+    with pytest.raises(ValueError, match="staged 10 rows"):
+        V.stage_slices(df, path, [("", F.col("x") < 5), ("hi", F.col("x") >= 5)])
+    assert not [d for d in os.listdir(path) if d.startswith("_staging-")]
+
+
+def test_stage_slices_overlapping_conditions_first_match_wins(spark, tmp_path):
+    """Slice conditions resolve first-match-wins (the tag is one
+    ``F.when`` chain): a row matching several conditions lands only in
+    the earliest listed slice."""
+    df = spark.range(10).selectExpr("id AS x")
+    path = str(tmp_path / "ovl")
+    staged = V.stage_slices(
+        df, path, [("a", F.col("x") < 6), ("b", F.col("x") < 10)]
+    )
+    staged.commit("a", "full")
+    staged.commit("b", "append")
+    assert [e["rows"] for e in V.versions(path)] == [6, 4]
+    assert sorted(r.x for r in V.read_version(spark, path, 1).collect()) == list(
+        range(6)
+    )
+
+
+# --- commit stats from staged parquet footers -------------------------
+
+
+def _aggregate_manifest_stats(spark, path: str, entry: dict, cols) -> dict:
+    """What a ``groupBy(input_file_name())`` aggregate over a committed
+    version records: rows, commit-level stats and per-file stats, in
+    the manifest's serialized form (files with no rows are absent)."""
+    from urllib.parse import unquote, urlparse
+
+    vdir = os.path.join(path, entry["dir"])
+    aggs = [F.count(F.lit(1)).alias("__rows")]
+    for c in cols:
+        aggs += [F.min(c).alias(f"__min_{c}"), F.max(c).alias(f"__max_{c}")]
+    per_file = (
+        spark.read.parquet(vdir)
+        .groupBy(F.input_file_name().alias("__file"))
+        .agg(*aggs)
+        .collect()
+    )
+    out: dict = {"rows": sum(r["__rows"] for r in per_file)}
+    if not per_file:
+        return out
+    out["stats"] = {}
+    for c in cols:
+        los = [r[f"__min_{c}"] for r in per_file if r[f"__min_{c}"] is not None]
+        his = [r[f"__max_{c}"] for r in per_file if r[f"__max_{c}"] is not None]
+        out["stats"][c] = {
+            "min": V._stat_value(min(los)) if los else None,
+            "max": V._stat_value(max(his)) if his else None,
+        }
+    out["file_stats"] = {
+        os.path.relpath(unquote(urlparse(r["__file"]).path), vdir): {
+            c: {
+                "min": V._stat_value(r[f"__min_{c}"]),
+                "max": V._stat_value(r[f"__max_{c}"]),
+            }
+            for c in cols
+        }
+        for r in per_file
+    }
+    return out
+
+
+def _assert_stats_parity(spark, path: str, cols, version=None) -> dict:
+    import json
+
+    e = V._entry(V.versions(path), path, version)
+    got = {k: e[k] for k in ("rows", "stats", "file_stats") if k in e}
+    want = _aggregate_manifest_stats(spark, path, e, cols)
+    # JSON form: NaN compares equal to itself and -0.0 stays distinct
+    assert json.dumps(got, sort_keys=True) == json.dumps(want, sort_keys=True)
+    return e
+
+
+def test_footer_stats_match_spark_aggregate(spark, tmp_path):
+    """Per-file and commit stats taken from the staged footers equal
+    Spark's own min/max for every footer-exact type, across files, with
+    NULLs and a file whose column is entirely NULL."""
+    df = spark.range(0, 30, 1, 3).select(
+        F.col("id").alias("l"),
+        (F.col("id") - 15).cast("int").alias("i"),
+        F.expr("date_add(date'1999-12-25', cast(id AS int))").alias("d"),
+        F.expr(
+            "timestamp_ntz'2020-01-01 00:00:00' + make_interval(0, 0, 0, 0, 0, 0, id * 1.5)"
+        ).alias("tn"),
+        ((F.col("id") - 15) / 3).cast("decimal(18,2)").alias("d18"),
+        F.when(
+            F.col("id") % 4 != 0,
+            ((F.col("id") - 15) * 123456789.0123).cast("decimal(38,10)"),
+        ).alias("d38"),
+        (F.col("id") % 2 == 0).alias("bo"),
+        F.concat(
+            F.element_at(F.array(F.lit("é"), F.lit("z"), F.lit("Ω"), F.lit("a")),
+                         (F.col("id") % 4 + 1).cast("int")),
+            F.col("id").cast("string"),
+        ).alias("st"),
+        F.when(F.col("id") >= 10, F.col("id")).alias("first_file_null"),
+    )
+    cols = tuple(df.columns)
+    path = str(tmp_path / "t")
+    V.write_version(df, path, stats_cols=cols)
+    e = _assert_stats_parity(spark, path, cols)
+    assert len(e["file_stats"]) == 3
+    assert any(
+        v["first_file_null"] == {"min": None, "max": None}
+        for v in e["file_stats"].values()
+    )
+
+
+def test_footer_stats_all_null_empty_and_escaped_partitions(spark, tmp_path):
+    """An all-NULL stats column records {None, None}; an empty commit
+    records no stats; a partitioned commit whose values Spark
+    hive-escapes keys file_stats by the on-disk escaped path, and a
+    pruned read over it opens only the matching files."""
+    from urllib.parse import unquote
+
+    nulls = str(tmp_path / "nulls")
+    V.write_version(
+        spark.range(0, 8, 1, 2).select(
+            "id", F.lit(None).cast("long").alias("n")
+        ),
+        nulls,
+        stats_cols=("n",),
+    )
+    e = _assert_stats_parity(spark, nulls, ("n",))
+    assert e["stats"] == {"n": {"min": None, "max": None}}
+
+    empty = str(tmp_path / "empty")
+    V.write_version(spark.range(5).where("id < 0"), empty, stats_cols=("id",))
+    e = _assert_stats_parity(spark, empty, ("id",))
+    assert e["rows"] == 0 and "stats" not in e and "file_stats" not in e
+
+    part = str(tmp_path / "part")
+    df = spark.range(0, 20, 1, 2).select(
+        F.when(F.col("id") < 10, F.lit("a:0")).otherwise(F.lit("a b")).alias("k"),
+        F.col("id").alias("v"),
+    )
+    # stats on the partition column come from the aggregate fallback,
+    # which reads the escaped file paths
+    V.write_version(df, part, stats_cols=("v", "k"), partition_by=("k",))
+    e = _assert_stats_parity(spark, part, ("v", "k"))
+    assert sorted(k.split("/")[0] for k in e["file_stats"]) == [
+        "k=a b", "k=a%3A0"
+    ]
+    pruned = V.read_version(spark, part, prune=("v", 2, 5))
+    assert sorted((r.k, r.v) for r in pruned.collect()) == [
+        ("a:0", v) for v in range(2, 6)
+    ]
+    files = pruned.inputFiles()
+    assert len(files) == 1 and "/k=a%3A0/" in unquote(files[0])
+
+
+def test_footer_fallback_types_keep_aggregate_stats(spark, tmp_path):
+    """Columns whose footers carry no exact min/max (session-timezone
+    timestamps are INT96, strings over 4 KB lose their stats, double
+    footers order -0.0 and 0.0 unlike Spark) keep Spark's aggregate
+    values."""
+    df = spark.range(0, 12, 1, 3).select(
+        F.col("id"),
+        F.expr(
+            "timestamp'2021-03-04 05:06:07' + make_interval(0, 0, 0, id, 0, 0, 0)"
+        ).alias("ts"),
+        F.concat(
+            F.lit("x" * 5000), F.col("id").cast("string")
+        ).alias("big"),
+        # Spark keeps the first of -0.0/0.0 it meets; the footer's min
+        # is -0.0 and its max 0.0
+        F.element_at(
+            F.array(
+                F.lit(-0.0), F.lit(0.0), F.lit(None).cast("double"),
+                F.lit(-1.5), F.lit(float("nan")), F.lit(2.5), F.lit(0.0),
+                F.lit(-0.0),
+            ),
+            (F.col("id") % 8 + 1).cast("int"),
+        ).alias("dbl"),
+    )
+    cols = ("ts", "big", "dbl")
+    path = str(tmp_path / "fb")
+    V.write_version(df, path, stats_cols=cols)
+    e = _assert_stats_parity(spark, path, cols)
+    assert e["stats"]["ts"]["min"].startswith("2021-03-04")
+
+
+def _spark_jobs(spark) -> int:
+    return spark.sparkContext._jsc.sc().dagScheduler().numTotalJobs()
+
+
+def test_stats_commit_runs_one_spark_job(spark, tmp_path):
+    """A commit with footer-exact stats columns costs exactly its write
+    job: rows and stats come from the staged footers."""
+    for i, col in enumerate(
+        (F.col("id"), F.expr("date_add(date'2020-01-01', cast(id AS int))"))
+    ):
+        df = spark.range(0, 100, 1, 4).select("id", col.alias("s"))
+        path = str(tmp_path / f"j{i}")
+        before = _spark_jobs(spark)
+        V.write_version(df, path, stats_cols=("s",))
+        assert _spark_jobs(spark) - before == 1
+        assert V.versions(path)[0]["stats"]["s"]["min"] is not None
