@@ -84,6 +84,8 @@ from __future__ import annotations
 
 import json
 import os
+import posixpath
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -511,14 +513,47 @@ def _chunk_min_max(chunk, rows: int, dt, want):
     return lo, hi
 
 
+class _StagedPart(NamedTuple):
+    """One staged data file on its way into a commit — the input of
+    ``adopt_staged_files``. ``rel_dir`` is its hive subdir as on disk
+    (``""`` = flat); ``stats`` maps each stats column the written
+    schema holds to the file's ``(min, max)``, ``(None, None)`` when
+    the column is all NULL in the file."""
+
+    file: str
+    rel_dir: str
+    rows: int
+    stats: dict
+
+
+def _file_key(p: _StagedPart) -> str:
+    """The manifest key of a staged file: its path relative to the
+    committed data dir, hive-escaped as on disk."""
+    return posixpath.join(p.rel_dir, os.path.basename(p.file))
+
+
+def _spark_order(v):
+    """Sort key putting stat values in Spark's order: NaN above every
+    other float (Python compares NaN False both ways)."""
+    return (v != v, v)
+
+
+def _bound(pick, vals):
+    """``min`` or ``max`` (``pick``) of the non-NULL ``vals`` in Spark's
+    order; None when every value is NULL."""
+    return pick(
+        (v for v in vals if v is not None), key=_spark_order, default=None
+    )
+
+
 def _staged_footers(staged: str, types: dict) -> list:
-    """Every ``part-*.parquet`` file under a staged dir, read from its
-    footer alone (no Spark job): ``(rel_path, rows, {col: (min, max)})``
-    with ``rel_path`` as on disk (hive-escaped) relative to ``staged``.
-    ``types`` maps each stats column to its Spark type (None when the
-    written schema lacks it); a column's value is (None, None) when all
-    NULL and ``_INEXACT`` when the footers cannot give it exactly (also
-    for columns not stored in the file, e.g. partition columns)."""
+    """Every ``part-*.parquet`` file under a staged dir as a
+    ``_StagedPart``, read from its footer alone (no Spark job), with
+    ``rel_dir`` relative to ``staged``. ``types`` maps each stats column
+    to its Spark type; a column's value is (None, None) when all NULL
+    and ``_INEXACT`` when the footers cannot give it exactly (also for
+    columns not stored in the file, e.g. partition columns). A file
+    with no rows carries no stats."""
     import pyarrow.parquet as pq
 
     out = []
@@ -537,8 +572,10 @@ def _staged_footers(staged: str, types: dict) -> list:
                 }
                 for c, dt in types.items():
                     mm[c] = _file_min_max(md, idx.get(c), dt)
-            rel = os.path.relpath(fp, staged).replace(os.sep, "/")
-            out.append((rel, md.num_rows, mm))
+            rel_dir = os.path.relpath(root, staged).replace(os.sep, "/")
+            out.append(
+                _StagedPart(fp, "" if rel_dir == "." else rel_dir, md.num_rows, mm)
+            )
     return out
 
 
@@ -571,20 +608,6 @@ def _file_overlaps(entry: dict, rel_file: str, col: str, lo, hi) -> bool:
     if mn is None or mx is None:  # all-NULL file for the column
         return False
     return not (mx < lo or mn > hi)
-
-
-def _partition_dirs(vdir: str) -> list[str]:
-    """Relative hive-layout leaf directories under a committed data
-    dir (e.g. ``["o_year=1998", "o_year=1999"]``; multi-level keys
-    join with ``/``). One os.walk at commit time; recorded in the
-    manifest so readers prune without listing the directory tree."""
-    out = []
-    for root, _dirs, files in os.walk(vdir):
-        if any(f.startswith("part-") and f.endswith(".parquet") for f in files):
-            rel = os.path.relpath(root, vdir)
-            if rel != ".":
-                out.append(rel.replace(os.sep, "/"))
-    return sorted(out)
 
 
 def _partition_value(rel_dir: str, col: str) -> str | None:
@@ -705,18 +728,19 @@ def _commit(
     expected_head: int | None = None,
     **meta,
 ) -> int:
-    """Shared commit protocol, staged so the commit lock's critical
-    section is O(manifest), never O(data): the COMPLETE data directory
-    lands under an uncommitted ``_staging-*`` name FIRST — outside the
-    lock, so concurrent writers' Spark writes overlap instead of
-    convoying — then the lock covers only slot claim + one directory
-    rename + the manifest swap (``_publish_staged``). A failure at any
-    point leaves the previous manifest current and readable (a crashed
-    writer's staging dir is invisible and reclaimed by vacuum's grace
-    sweep; its flock dies with it). Commits still SERIALIZE in version
-    order at the swap — that is the log contract — but the serialized
-    region no longer contains the write. Readers never block (they
-    only read the manifest).
+    """Shared commit protocol of the library writers, staged so the
+    commit lock's critical section is O(manifest), never O(data): the
+    COMPLETE data directory lands under an uncommitted ``_staging-*``
+    name FIRST — outside the lock, so concurrent writers' Spark writes
+    overlap instead of convoying — and that directory is handed to
+    ``adopt_staged_files`` as the commit bundle, so the lock covers only
+    slot claim + one directory rename + the manifest swap. A failure at
+    any point leaves the previous manifest current and readable (a
+    crashed writer's staging dir is invisible and reclaimed by vacuum's
+    grace sweep; its flock dies with it). Commits still SERIALIZE in
+    version order at the swap — that is the log contract — but the
+    serialized region no longer contains the write. Readers never block
+    (they only read the manifest).
 
     ``stats_cols`` records BOTH commit-level and PER-FILE min/max for
     the named columns — the data-skipping index: a chain read or
@@ -725,34 +749,26 @@ def _commit(
     whose recorded ranges intersect the slice (Delta's stats-per-file;
     decisive when the commit is range-clustered on the pruned column).
     Row counts and per-file min/max come from the staged files' parquet
-    footers, so a commit costs its one write job; only stats columns
-    whose footers cannot give an exact value (``_footer_type``: session
-    timestamps, float/double, strings over 4 KB, partition columns) run
-    one ``groupBy(input_file_name())`` aggregate over the staged files.
-    The commit range rolls up from the per-file values driver-side.
+    footers (``_staged_footers``, read outside the lock), so a commit
+    costs its one write job; only stats columns whose footers cannot
+    give an exact value (``_footer_type``: session timestamps,
+    float/double, strings over 4 KB, partition columns) run one
+    ``groupBy(input_file_name())`` aggregate over the staged files.
+    ``adopt_staged_files`` rolls the per-file values up into the
+    manifest entry, by the same rule for every writer.
 
     ``partition_by`` lays the commit out hive-partitioned (the
     MergeTree ``ORDER BY (timestamp, station_id)`` analog,
-    clickhouse_etl.py:55-56) and records the partition directory list
-    in the manifest entry: a prune on a partition column then selects
-    matching subdirectories WITHIN a commit — at 100 TB a time-travel
-    read of one day touches one partition dir per commit, not every
-    live file's footer."""
+    clickhouse_etl.py:55-56) and the manifest entry records the
+    partition directory list: a prune on a partition column then
+    selects matching subdirectories WITHIN a commit — at 100 TB a
+    time-travel read of one day touches one partition dir per commit,
+    not every live file's footer. An empty partitioned write lands no
+    data file; the commit then holds one flat schema-bearing empty file
+    and no partition fields."""
     import shutil
     import uuid
 
-    reserved = {
-        "version",
-        "dir",
-        "rows",
-        "mode",
-        "stats",
-        "committed_at",
-        "partition_by",
-        "partition_dirs",
-    } & set(meta)
-    if reserved:
-        raise ValueError(f"meta keys collide with manifest fields: {reserved}")
     os.makedirs(path, exist_ok=True)
     staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
     try:
@@ -760,66 +776,36 @@ def _commit(
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(staging)
-        if partition_by and not _partition_dirs(staging):
-            # an EMPTY partitioned write lands no data files at all —
-            # the committed dir would be unreadable; land a flat
-            # schema-bearing empty file instead (no partition metadata)
-            df.limit(0).write.mode("overwrite").parquet(staging)
-            partition_by = ()
         types = {f.name: f.dataType for f in df.schema.fields}
-        footers = _staged_footers(
-            staging, {c: types.get(c) for c in stats_cols}
+        parts = _staged_footers(
+            staging, {c: types[c] for c in stats_cols if c in types}
         )
-        rows = sum(n for _rel, n, _mm in footers)
-        # files with no rows get no file_stats entry
-        per_file = {rel: mm for rel, n, mm in footers if n}
         inexact = [
             c
             for c in stats_cols
-            if any(mm[c] is _INEXACT for mm in per_file.values())
+            if any(p.stats.get(c) is _INEXACT for p in parts)
         ]
         if inexact:
-            for rel, mm in _aggregate_file_stats(
-                df, staging, list(per_file), inexact
-            ).items():
-                per_file[rel].update(mm)
-        extra = dict(meta)
-        if partition_by:
-            extra["partition_by"] = list(partition_by)
-            extra["partition_dirs"] = _partition_dirs(staging)
-        stats = None
-        if stats_cols and per_file:
-            stats = {}
-            for c in stats_cols:
-                los = [mm[c][0] for mm in per_file.values() if mm[c][0] is not None]
-                his = [mm[c][1] for mm in per_file.values() if mm[c][1] is not None]
-                stats[c] = {
-                    "min": _stat_value(min(los)) if los else None,
-                    "max": _stat_value(max(his)) if his else None,
-                }
-            extra["file_stats"] = {
-                rel: {
-                    c: {
-                        "min": _stat_value(mm[c][0]),
-                        "max": _stat_value(mm[c][1]),
-                    }
-                    for c in stats_cols
-                }
-                for rel, mm in per_file.items()
-            }
-        return _publish_staged(
-            path,
-            staging,
-            mode,
-            rows,
-            stats,
-            extra,
-            lock_timeout_s,
-            expected_head=expected_head,
-        )
+            agg = _aggregate_file_stats(
+                df, staging, [_file_key(p) for p in parts if p.rows], inexact
+            )
+            parts = [
+                p._replace(stats={**p.stats, **agg.get(_file_key(p), {})})
+                for p in parts
+            ]
     except BaseException:
         shutil.rmtree(staging, ignore_errors=True)
         raise
+    return adopt_staged_files(
+        path,
+        parts,
+        mode,
+        meta,
+        schema=df.schema,
+        bundle=staging,
+        lock_timeout_s=lock_timeout_s,
+        expected_head=expected_head,
+    )
 
 
 def _commit_timestamp(vs: list[dict]) -> float:
@@ -1090,44 +1076,24 @@ class StagedSlices:
     """Handle returned by :func:`stage_slices`: the staged files of
     several pending commits, adopted one slice at a time (in any
     order, interleavable with other commits — adoption is a manifest
-    operation, the Spark write already happened). ``commit`` moves the
-    slice's files into the next ``v=N`` via ``adopt_staged_files`` —
-    the same lock/manifest protocol every writer uses."""
+    operation, the Spark write already happened). ``commit`` hands the
+    slice's files to ``adopt_staged_files``, the one staged-files-to-
+    manifest step every writer uses: the files move into the next
+    ``v=N``, an empty slice commits one schema-bearing empty file, and
+    partition fields come from the slice's hive dirs. The staging dir
+    goes once the last slice commits."""
 
-    def __init__(
-        self, path: str, staging: str, slices: dict, schema, partition_by=()
-    ):
+    def __init__(self, path: str, staging: str, slices: dict, schema):
         self.path = path
         self._staging = staging
-        # name -> [(abs_path, rel_dir, footer rows), ...]
-        self._slices = slices
-        self._schema = schema  # pyarrow schema for empty slices
-        self._partition_by = tuple(partition_by)
+        self._slices = slices  # name -> [_StagedPart, ...]
+        self._schema = schema  # Spark schema, for empty slices
 
     def commit(self, name: str, mode: str, meta: dict | None = None) -> int:
-        import pyarrow.parquet as pq
-
         import shutil
-        import uuid
 
-        files = self._slices.pop(name)
-        if not files:
-            # an empty slice still needs a schema-bearing commit (the
-            # same empty-snapshot discipline as _commit): land one
-            # empty flat parquet file — named part-* like every data
-            # file, because readers recognize ONLY part-*.parquet
-            os.makedirs(self._staging, exist_ok=True)
-            f = os.path.join(self._staging, f"part-{uuid.uuid4().hex}.parquet")
-            pq.write_table(self._schema.empty_table(), f)
-            files = [(f, "", 0)]
-        rows = sum(n for _f, _rel, n in files)
-        meta = dict(meta or {})
-        dirs = sorted({rel for _f, rel, _n in files if rel})
-        if self._partition_by and dirs:
-            meta["partition_by"] = list(self._partition_by)
-            meta["partition_dirs"] = dirs
         ver = adopt_staged_files(
-            self.path, [(f, rel) for f, rel, _n in files], mode, rows, meta=meta
+            self.path, self._slices.pop(name), mode, meta, schema=self._schema
         )
         if not self._slices:
             shutil.rmtree(self._staging, ignore_errors=True)
@@ -1153,7 +1119,8 @@ def stage_slices(
     ``write_version(partition_by=...)`` records it), so an N-commit
     chain built from one source frame costs one write job + N manifest
     adoptions instead of N write jobs. Per-file row counts come from
-    the staged parquet footers (``_staged_footers``), no Spark action.
+    the staged parquet footers (``_staged_footers``), no Spark action;
+    each ``StagedSlices.commit`` is an ``adopt_staged_files`` call.
     Spark hive-escapes the ``__slice=`` directory names on disk, so
     they map back to slice names by unquoting; if the footers' row
     total over all slices differs from the rows staged (a directory
@@ -1166,13 +1133,11 @@ def stage_slices(
     Commits that need per-commit stats (``stats_cols``), tombstones
     and upserts keep the sequential paths — only plain data commits
     batch."""
-    import posixpath
     import shutil
     import uuid
     from urllib.parse import unquote
 
     from pyspark.sql import functions as F
-    from pyspark.sql.pandas.types import to_arrow_schema
 
     os.makedirs(path, exist_ok=True)
     staging = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
@@ -1191,16 +1156,14 @@ def stage_slices(
     ).parquet(staging)
     out: dict = {name: [] for name, _c in slices}
     staged_rows = matched = 0
-    for rel, n, _mm in _staged_footers(staging, {}):
-        top, _, rest = rel.partition("/")
+    for p in _staged_footers(staging, {}):
+        top, _, rest = p.rel_dir.partition("/")
         key, eq, raw = top.partition("=")
         name = unquote(raw) if eq and key == "__slice" else None
-        staged_rows += n
+        staged_rows += p.rows
         if name in out:
-            out[name].append(
-                (os.path.join(staging, rel), posixpath.dirname(rest), n)
-            )
-            matched += n
+            out[name].append(p._replace(rel_dir=rest))
+            matched += p.rows
     if matched != staged_rows:
         shutil.rmtree(staging, ignore_errors=True)
         raise ValueError(
@@ -1208,63 +1171,119 @@ def stage_slices(
             f"map back to the slice names {sorted(out)} — a slice name "
             "that Spark cannot round-trip as a partition value (e.g. '')"
         )
-    schema = to_arrow_schema(df.schema)
-    return StagedSlices(path, staging, out, schema, partition_by)
+    return StagedSlices(path, staging, out, df.schema)
+
+
+# manifest entry fields a caller's meta must not set
+_RESERVED_KEYS = frozenset(
+    {
+        "version",
+        "dir",
+        "rows",
+        "mode",
+        "stats",
+        "committed_at",
+        "partition_by",
+        "partition_dirs",
+        "file_stats",
+    }
+)
 
 
 def adopt_staged_files(
     path: str,
-    files: list[str],
+    parts: list,
     mode: str,
-    rows: int,
-    stats: dict | None = None,
     meta: dict | None = None,
+    schema=None,
+    bundle: str | None = None,
     lock_timeout_s: float = 600.0,
-    file_stats: dict | None = None,
+    expected_head: int | None = None,
 ) -> int:
     """Adopt already-written ``part-*.parquet`` files as the table's
-    next version: under the commit lock, the files MOVE into ``v=N``
-    and the manifest entry publishes — the commit protocol for writers
-    that produce data outside Spark's write path (the
-    ``versioned_table`` format's batch/stream writers stage per-task
-    parquet in executors, then adopt the staged files here). Same
-    crash story as ``_commit``: a failure before the manifest swap
-    leaves only an invisible ``_staging-*`` bundle (reclaimed by
-    vacuum's grace sweep); the previous manifest stays current
-    throughout. ``mode='append'`` requires an existing base, like
-    ``append_version``; ``stats`` is a pre-merged
-    ``{col: {min, max}}`` map in manifest form; ``file_stats`` maps
-    each file's adopted RELATIVE PATH (hive subdir + basename;
-    basename alone for flat layouts) to its own ``{col: {min, max}}``
-    (per-file data skipping). Each ``files`` element is either a path
-    (adopted flat) or a ``(path, rel_dir)`` pair — the file lands
-    under that hive subdirectory, giving format writers partitioned
-    layouts (``partition_by``/``partition_dirs`` then ride in
-    ``meta``, as ``write_version`` records them). The lock's critical section is O(manifest): files
-    bundle OUTSIDE the lock, then ``_publish_staged`` claims the slot,
-    renames, and swaps."""
+    next version — the ONE step that turns staged files into a
+    manifest entry, for every writer: ``_commit`` (the library
+    writers), ``StagedSlices.commit`` and the ``versioned_table``
+    format's batch and stream writers. Each of ``parts`` is a
+    ``_StagedPart`` (path, hive ``rel_dir``, rows, per-file
+    ``{col: (min, max)}``); the writers differ only in where those
+    come from (parquet footers or in-task Arrow stats). Here:
+
+    - ``meta`` keys may not collide with manifest fields;
+    - no ``parts`` lands one empty schema-bearing file (``schema`` is
+      the written Spark schema), so an empty commit stays readable;
+    - ``rows`` is the parts' sum;
+    - commit ``stats`` and ``file_stats`` (keyed by the file's path
+      relative to ``v=N``, hive-escaped as on disk) roll up from the
+      parts' stats: a 0-row file gets no entry, a column absent from
+      the written schema gets no stat, an all-NULL column gets
+      ``{None, None}``, and a float column holding NaN has max NaN
+      (Spark's order);
+    - the parts' hive dirs give ``partition_by``/``partition_dirs``,
+      exactly as readers prune them; no dirs, no partition fields.
+
+    The files MOVE into a ``_staging-*`` bundle outside the lock
+    (``bundle`` names one they already sit in, as ``_commit``'s
+    staging dir: then no file moves), and ``_publish_staged`` claims
+    the slot, renames the bundle to ``v=N`` and swaps the manifest
+    under the lock — O(manifest). Same crash story as ``_commit``: a
+    failure before the swap leaves only an invisible ``_staging-*``
+    bundle (reclaimed by vacuum's grace sweep). ``mode='append'``
+    requires an existing base, like ``append_version``."""
     import shutil
     import uuid
 
     meta = dict(meta or {})
-    if file_stats:
-        meta["file_stats"] = file_stats
-    reserved = {
-        "version", "dir", "rows", "mode", "stats", "committed_at"
-    } & set(meta)
+    reserved = _RESERVED_KEYS & set(meta)
     if reserved:
         raise ValueError(f"meta keys collide with manifest fields: {reserved}")
     os.makedirs(path, exist_ok=True)
-    bundle = os.path.join(path, f"_staging-{uuid.uuid4().hex}")
-    os.makedirs(bundle)
+    bundle = bundle or os.path.join(path, f"_staging-{uuid.uuid4().hex}")
     try:
-        for f in files:
-            src, rel_dir = f if isinstance(f, tuple) else (f, "")
-            d = os.path.join(bundle, rel_dir) if rel_dir else bundle
-            os.makedirs(d, exist_ok=True)
-            os.replace(src, os.path.join(d, os.path.basename(src)))
+        os.makedirs(bundle, exist_ok=True)
+        if not parts:
+            import pyarrow.parquet as pq
+            from pyspark.sql.pandas.types import to_arrow_schema
+
+            f = os.path.join(bundle, f"part-{uuid.uuid4().hex}.parquet")
+            pq.write_table(to_arrow_schema(schema).empty_table(), f)
+            parts = [_StagedPart(f, "", 0, {})]
+        for p in parts:
+            dst = os.path.join(bundle, _file_key(p))
+            if p.file != dst:
+                os.makedirs(os.path.dirname(dst), exist_ok=True)
+                os.replace(p.file, dst)
+        live = [p for p in parts if p.rows]
+        stats = {}
+        for c in dict.fromkeys(c for p in live for c in p.stats):
+            vals = [p.stats[c] for p in live if c in p.stats]
+            stats[c] = {
+                "min": _stat_value(_bound(min, [lo for lo, _ in vals])),
+                "max": _stat_value(_bound(max, [hi for _, hi in vals])),
+            }
+        if stats:
+            meta["file_stats"] = {
+                _file_key(p): {
+                    c: {"min": _stat_value(lo), "max": _stat_value(hi)}
+                    for c, (lo, hi) in p.stats.items()
+                }
+                for p in live
+            }
+        dirs = sorted({p.rel_dir for p in parts if p.rel_dir})
+        if dirs:
+            meta["partition_by"] = [
+                comp.partition("=")[0] for comp in dirs[0].split("/")
+            ]
+            meta["partition_dirs"] = dirs
         return _publish_staged(
-            path, bundle, mode, rows, stats, meta, lock_timeout_s
+            path,
+            bundle,
+            mode,
+            sum(p.rows for p in parts),
+            stats,
+            meta,
+            lock_timeout_s,
+            expected_head=expected_head,
         )
     except BaseException:
         shutil.rmtree(bundle, ignore_errors=True)

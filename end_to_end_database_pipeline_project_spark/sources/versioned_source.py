@@ -30,13 +30,18 @@ same manifest protocol as a *format*, so ANY Spark pipeline can say
   diverge the downstream copy.
 
 - **Batch write**: ``df.write.format("versioned_table")`` — tasks
-  stage Arrow batches as parquet part files, the driver adopts them as
-  ONE manifest commit under the commit lock (``mode("overwrite")`` =
-  full snapshot, ``mode("append")`` = append delta).
+  stage Arrow batches as parquet part files and report one
+  ``_StagedPart`` per file (rows, per-file min/max); the driver hands
+  them to ``adopt_staged_files`` — the same staged-files-to-manifest
+  step the library writers use — as ONE commit under the commit lock
+  (``mode("overwrite")`` = full snapshot, ``mode("append")`` = append
+  delta; a zero-row overwrite commits one empty schema-bearing file, a
+  zero-row append commits nothing).
 - **Streaming write**: ``df.writeStream.format("versioned_table")`` —
   the exactly-once keyless sink as a first-class stream sink: each
-  micro-batch is one batch-id-stamped commit; replays (wiped
-  checkpoint included) are discarded at the committed watermark.
+  non-empty micro-batch is one batch-id-stamped ``adopt_staged_files``
+  commit; replays (wiped checkpoint included) are discarded at the
+  committed watermark.
 
 Options: ``path`` (table root), ``schema`` (DDL — parsed by Spark
 itself, so parametrized/nested types like ``decimal(18,2)`` or
@@ -46,8 +51,11 @@ latest commit at or before it; mutually exclusive with ``version``),
 ``ignoredeletes`` (stream: skip tombstone commits), ``ignorechanges``
 (stream: emit upsert commits' rows as plain appends — Delta's
 ignoreChanges), ``statscols`` (write: comma-separated columns whose
-min/max are computed incrementally in the write tasks and recorded in
-the manifest for data skipping), ``partitionby`` (write: comma-separated
+min/max are computed incrementally in the write tasks, in Spark's
+order — NaN above every value — and recorded in the manifest for data
+skipping by the same rule as ``write_version(stats_cols=...)``: a
+column the written schema lacks gets no stat, an all-NULL one
+``{None, None}``), ``partitionby`` (write: comma-separated
 columns — tasks dynamic-partition their Arrow batches into hive
 subdirs and the manifest records ``partition_by``/``partition_dirs``
 exactly as the library writer does, so format-written tables prune
@@ -110,11 +118,13 @@ from pyspark.sql.datasource import (
 )
 
 from .versioned import (
+    _bound,
     _chain,
     _compose_schema_map,
     _entry,
     _mode,
     _stat_value,
+    _StagedPart,
     adopt_staged_files,
     version_at_timestamp,
     version_before_timestamp,
@@ -623,9 +633,11 @@ def _raw_matches(raw: str, flt) -> bool:
 def _stats_match(st: dict, flt) -> bool:
     """Can a file whose recorded [min, max] is ``st`` contain a row
     satisfying one pushed comparison filter? Unknown/incomparable →
-    True (pruning is performance, never correctness). Filter values
-    coerce to the manifest's serialized form (dates/decimals → the
-    same ISO/str forms ``_stat_value`` wrote)."""
+    True (pruning is performance, never correctness); so is a NaN
+    bound or filter value, since Spark orders NaN above every value
+    and Python compares it False both ways. Filter values coerce to
+    the manifest's serialized form (dates/decimals → the same ISO/str
+    forms ``_stat_value`` wrote)."""
     from pyspark.sql.datasource import (
         EqualTo,
         GreaterThan,
@@ -638,11 +650,13 @@ def _stats_match(st: dict, flt) -> bool:
     mn, mx = st.get("min"), st.get("max")
     if mn is None or mx is None:
         return False  # all-NULL file for the column: no comparison matches
+    if mn != mn or mx != mx:
+        return True  # NaN bound
 
     def ser(v):
         s = _stat_value(v)
         # only compare like with like: a type mismatch keeps the file
-        if isinstance(s, bool) or s is None:
+        if isinstance(s, bool) or s is None or s != s:
             return None
         if isinstance(s, (int, float)) and isinstance(mn, (int, float)):
             return s
@@ -819,6 +833,8 @@ class _VersionedBatchReader(DataSourceReader):
         return parts
 
     def read(self, partition) -> Iterator:
+        if partition is None:  # pushed filters pruned every file
+            return
         f, exclusions, pvals, renames, drops = partition.value
         yield from _read_file_batches(
             f, self.schema, exclusions, pvals, renames, drops
@@ -1126,20 +1142,22 @@ class _VersionedCDFStreamReader(_VersionedStreamReader):
             yield pa.RecordBatch.from_arrays(arrays, schema=self.schema)
 
 
-class _StagedPart(WriterCommitMessage):
-    def __init__(self, file: str | None, rows: int, stats: dict, rel_dir: str = ""):
-        self.file = file
-        self.rows = rows
-        self.stats = stats  # {col: (py_min, py_max)}
-        self.rel_dir = rel_dir  # hive subdir ("" = unpartitioned)
-
-
 class _StagedParts(WriterCommitMessage):
-    """A dynamic-partitioning task's commit message: one `_StagedPart`
-    per hive directory the task touched."""
+    """A write task's commit message: one ``_StagedPart`` per part file
+    it staged (per hive directory it touched, when partitioned)."""
 
     def __init__(self, parts: list):
         self.parts = parts
+
+
+def _names_option(options: dict, key: str) -> list:
+    """A comma-separated column-list option."""
+    return [c.strip() for c in options.get(key, "").split(",") if c.strip()]
+
+
+def _staged_parts(messages) -> list:
+    """The staged files of a writer's task commit messages."""
+    return [p for m in messages or [] if m is not None for p in m.parts]
 
 
 def _hive_dir_value(v) -> str:
@@ -1161,8 +1179,10 @@ def _write_task_parquet(
 ):
     """One task's Arrow batches → staged parquet part files, written
     incrementally (never materializing the task partition), with
-    running per-column min/max for the manifest stats. Runs in
-    executors; the driver only sees the commit message.
+    running per-column min/max in Spark's order for the manifest stats
+    (a column the written schema lacks gets none). Runs in executors;
+    the driver only sees the commit message: one ``_StagedPart`` per
+    file, which ``adopt_staged_files`` turns into the manifest entry.
 
     With ``partition_cols`` the task DYNAMIC-PARTITIONS its batches:
     each batch splits by the partition-value combination (an Arrow
@@ -1179,6 +1199,7 @@ def _write_task_parquet(
     writer applies. Stats still compute on the FULL batch, so a
     statscols entry that is also a partition column records
     correctly."""
+    import math
     import uuid
 
     import pyarrow as pa
@@ -1189,7 +1210,7 @@ def _write_task_parquet(
     pcols = list(partition_cols or [])
     MAX_OPEN = 64
     writers: OrderedDict = OrderedDict()  # rel_dir -> ParquetWriter
-    acc: dict = {}  # rel_dir -> list of [file, rows, mins, maxs]
+    acc: dict = {}  # rel_dir -> list of [file, rows, {col: (min, max)}]
     open_slot: dict = {}  # rel_dir -> the slot its open writer feeds
 
     def feed(rel_dir: str, tbl) -> None:
@@ -1208,23 +1229,30 @@ def _write_task_parquet(
             os.makedirs(d, exist_ok=True)
             f = os.path.join(d, f"part-{uuid.uuid4().hex}.parquet")
             w = writers[rel_dir] = pq.ParquetWriter(f, tbl.schema)
-            slot = open_slot[rel_dir] = [f, 0, {}, {}]
+            slot = open_slot[rel_dir] = [f, 0, {}]
             acc.setdefault(rel_dir, []).append(slot)
         w.write_table(tbl)
         slot[1] += tbl.num_rows
         return slot
 
     def track_stats(slot, b) -> None:
-        mins, maxs = slot[2], slot[3]
+        stats = slot[2]
         for c in stats_cols:
             if c not in b.schema.names:
                 continue
-            mm = pc.min_max(b.column(c))
+            col = b.column(c)
+            # pc.min_max skips NaN; Spark orders it above every value
+            nan = pa.types.is_floating(col.type) and pc.any(
+                pc.is_nan(col)
+            ).as_py()
+            if nan:
+                col = pc.filter(col, pc.invert(pc.is_nan(col)))
+            mm = pc.min_max(col)
             lo, hi = mm["min"].as_py(), mm["max"].as_py()
-            if lo is not None and (c not in mins or lo < mins[c]):
-                mins[c] = lo
-            if hi is not None and (c not in maxs or hi > maxs[c]):
-                maxs[c] = hi
+            if nan:
+                lo, hi = (math.nan if lo is None else lo), math.nan
+            old_lo, old_hi = stats.get(c, (None, None))
+            stats[c] = (_bound(min, (old_lo, lo)), _bound(max, (old_hi, hi)))
 
     try:
         for b in iterator:
@@ -1286,90 +1314,13 @@ def _write_task_parquet(
     finally:
         for w in writers.values():
             w.close()
-    out = [
-        _StagedPart(
-            f,
-            rows,
-            {c: (mins.get(c), maxs.get(c)) for c in stats_cols},
-            rel_dir,
-        )
-        for rel_dir, slots in acc.items()
-        for f, rows, mins, maxs in slots
-    ]
-    if not pcols:
-        return out[0] if out else _StagedPart(None, 0, {})
-    return _StagedParts(out)
-
-
-def _rel_file(p: "_StagedPart") -> str:
-    """The manifest file key a staged part will have once adopted:
-    its hive subdir (if any) + basename."""
-    base = os.path.basename(p.file)
-    return f"{p.rel_dir}/{base}" if p.rel_dir else base
-
-
-def _merge_staged(messages, stats_cols: list):
-    """Driver-side merge of task commit messages → (file moves as
-    ``(abs_path, rel_dir)`` pairs, rows, manifest-form commit stats,
-    manifest-form per-file stats keyed by adopted relative path)."""
-    parts: list = []
-    for m in messages:
-        if m is None:
-            continue
-        if isinstance(m, _StagedParts):
-            parts.extend(m.parts)
-        elif m.file:
-            parts.append(m)
-    moves = [(p.file, p.rel_dir) for p in parts]
-    rows = sum(p.rows for p in parts)
-    stats = None
-    if stats_cols and rows:
-        stats = {}
-        for c in stats_cols:
-            vals = [p.stats[c] for p in parts if c in p.stats]
-            los = [v[0] for v in vals if v[0] is not None]
-            his = [v[1] for v in vals if v[1] is not None]
-            if not los and not his:
-                # the column never appeared in any task's batches (a
-                # typo'd statscols name): record NOTHING — a missing
-                # stat means "must read", while a {None, None} stat
-                # would read as "provably empty" and prune live data
-                continue
-            stats[c] = {
-                "min": _stat_value(min(los)) if los else None,
-                "max": _stat_value(max(his)) if his else None,
-            }
-        stats = stats or None
-    file_stats = None
-    if stats:
-        file_stats = {
-            _rel_file(p): {
-                c: {
-                    "min": _stat_value(p.stats[c][0]),
-                    "max": _stat_value(p.stats[c][1]),
-                }
-                for c in p.stats
-                if c in stats
-            }
-            for p in parts
-        }
-    return moves, rows, stats, file_stats
-
-
-def _cleanup_staging(staging: str) -> None:
-    import shutil
-
-    shutil.rmtree(staging, ignore_errors=True)
-
-
-def _partition_meta(moves: list, partition_cols: list) -> dict | None:
-    """Manifest partition fields for adopted ``(path, rel_dir)`` moves
-    — the same ``partition_by``/``partition_dirs`` shape
-    ``write_version`` records, so readers prune identically."""
-    dirs = sorted({rel for _, rel in moves if rel})
-    if not (partition_cols and dirs):
-        return None
-    return {"partition_by": list(partition_cols), "partition_dirs": dirs}
+    return _StagedParts(
+        [
+            _StagedPart(f, rel_dir, rows, stats)
+            for rel_dir, slots in acc.items()
+            for f, rows, stats in slots
+        ]
+    )
 
 
 class _VersionedBatchWriter(DataSourceArrowWriter):
@@ -1391,18 +1342,10 @@ class _VersionedBatchWriter(DataSourceArrowWriter):
         import uuid
 
         self.path = _opt_path(options)
-        self.schema = _arrow_schema(schema)
+        self.schema = schema
         self.overwrite = overwrite
-        self.stats_cols = [
-            c.strip()
-            for c in options.get("statscols", "").split(",")
-            if c.strip()
-        ]
-        self.partition_cols = [
-            c.strip()
-            for c in options.get("partitionby", "").split(",")
-            if c.strip()
-        ]
+        self.stats_cols = _names_option(options, "statscols")
+        self.partition_cols = _names_option(options, "partitionby")
         self.staging = os.path.join(self.path, f"_staging-{uuid.uuid4().hex}")
 
     def write(self, iterator):
@@ -1411,41 +1354,27 @@ class _VersionedBatchWriter(DataSourceArrowWriter):
         )
 
     def commit(self, messages) -> None:
-        moves, rows, stats, file_stats = _merge_staged(
-            messages, self.stats_cols
-        )
+        import shutil
+
+        parts = _staged_parts(messages)
         try:
-            if not moves:
-                if not self.overwrite:
-                    return  # zero-row append: a no-op, not a commit
-                # zero-row OVERWRITE is a truncate: the snapshot must
-                # still be readable, so land one empty schema-bearing
-                # parquet file (flat — an empty partitioned layout has
-                # no dirs to record, mirroring the library writer)
-                import uuid
-
-                import pyarrow.parquet as pq
-
-                os.makedirs(self.staging, exist_ok=True)
-                f = os.path.join(
-                    self.staging, f"part-{uuid.uuid4().hex}.parquet"
+            # a zero-row append is a no-op, not a commit; a zero-row
+            # OVERWRITE is a truncate: adoption lands one empty
+            # schema-bearing file, as for the library writer
+            if parts or self.overwrite:
+                adopt_staged_files(
+                    self.path,
+                    parts,
+                    "full" if self.overwrite else "append",
+                    schema=self.schema,
                 )
-                pq.write_table(self.schema.empty_table(), f)
-                moves = [(f, "")]
-            adopt_staged_files(
-                self.path,
-                moves,
-                "full" if self.overwrite else "append",
-                rows,
-                stats=stats,
-                meta=_partition_meta(moves, self.partition_cols),
-                file_stats=file_stats,
-            )
         finally:
-            _cleanup_staging(self.staging)
+            shutil.rmtree(self.staging, ignore_errors=True)
 
     def abort(self, messages) -> None:
-        _cleanup_staging(self.staging)
+        import shutil
+
+        shutil.rmtree(self.staging, ignore_errors=True)
 
 
 class _VersionedStreamWriter(DataSourceStreamArrowWriter):
@@ -1464,16 +1393,8 @@ class _VersionedStreamWriter(DataSourceStreamArrowWriter):
         import uuid
 
         self.path = _opt_path(options)
-        self.stats_cols = [
-            c.strip()
-            for c in options.get("statscols", "").split(",")
-            if c.strip()
-        ]
-        self.partition_cols = [
-            c.strip()
-            for c in options.get("partitionby", "").split(",")
-            if c.strip()
-        ]
+        self.stats_cols = _names_option(options, "statscols")
+        self.partition_cols = _names_option(options, "partitionby")
         # one staging dir per sink instance; per-batch isolation comes
         # from commit() moving only ITS batch's message files
         self.staging = os.path.join(self.path, f"_staging-{uuid.uuid4().hex}")
@@ -1486,10 +1407,8 @@ class _VersionedStreamWriter(DataSourceStreamArrowWriter):
     def commit(self, messages, batchId: int) -> None:
         from ..streaming.versioned_sink import last_committed_batch
 
-        moves, rows, stats, file_stats = _merge_staged(
-            messages, self.stats_cols
-        )
-        if not moves:
+        parts = _staged_parts(messages)
+        if not parts:
             # an empty micro-batch commits nothing; a replay of it is
             # equally empty, so exactly-once holds without a watermark
             # bump
@@ -1497,39 +1416,17 @@ class _VersionedStreamWriter(DataSourceStreamArrowWriter):
         if batchId <= last_committed_batch(self.path):
             # replay of an already-committed batch: drop its staged
             # files, change nothing (exactly-once without row keys)
-            for f, _rel in moves:
-                try:
-                    os.unlink(f)
-                except FileNotFoundError:
-                    pass
+            self.abort(messages, batchId)
             return
         mode = "append" if versions(self.path) else "full"
-        meta = {"batch_id": batchId}
-        meta.update(_partition_meta(moves, self.partition_cols) or {})
-        adopt_staged_files(
-            self.path,
-            moves,
-            mode,
-            rows,
-            stats=stats,
-            meta=meta,
-            file_stats=file_stats,
-        )
+        adopt_staged_files(self.path, parts, mode, {"batch_id": batchId})
 
     def abort(self, messages, batchId: int) -> None:
-        for m in messages or []:
-            parts = (
-                m.parts
-                if isinstance(m, _StagedParts)
-                else [m]
-                if m is not None and m.file
-                else []
-            )
-            for p in parts:
-                try:
-                    os.unlink(p.file)
-                except FileNotFoundError:
-                    pass
+        for p in _staged_parts(messages):
+            try:
+                os.unlink(p.file)
+            except FileNotFoundError:
+                pass
 
 
 class _VersionedCDFReader(DataSourceReader):

@@ -565,7 +565,9 @@ def _lock_race_worker(path: str, counter: str, iters: int) -> None:
 
 def test_model_based_commit_sequences(spark, tmp_path):
     """Model-based check of the whole delta-log fold: random commit
-    sequences (append / delete / upsert / compact) against a pure
+    sequences (append through each of the three writers — library,
+    format batch writer, one-slice ``stage_slices`` — / delete / upsert
+    / compact) against a pure
     Python multiset model — read_version must equal the model AT EVERY
     VERSION (time travel included), and applying the typed CDF to a
     cursor snapshot must reconstruct the latest table whenever no
@@ -575,6 +577,11 @@ def test_model_based_commit_sequences(spark, tmp_path):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
+    from end_to_end_database_pipeline_project_spark.sources.versioned_source import (
+        register,
+    )
+
+    register(spark)
     KEYS = list(range(6))
     rows_st = st.lists(
         st.tuples(st.sampled_from(KEYS), st.integers(0, 99)),
@@ -585,6 +592,8 @@ def test_model_based_commit_sequences(spark, tmp_path):
     uniq_rows_st = rows_st.map(lambda rs: list({k: (k, v) for k, v in rs}.values()))
     op_st = st.one_of(
         st.tuples(st.just("append"), rows_st),
+        st.tuples(st.just("fmt_append"), rows_st),
+        st.tuples(st.just("slice_append"), rows_st),
         st.tuples(st.just("delete"), st.lists(st.sampled_from(KEYS), min_size=1, max_size=3)),
         st.tuples(st.just("upsert"), uniq_rows_st),
         st.tuples(st.just("compact"), st.just(None)),
@@ -603,6 +612,18 @@ def test_model_based_commit_sequences(spark, tmp_path):
                 V.append_version(
                     spark.createDataFrame(arg, "k long, v long"), path
                 )
+                model = model + arg
+            elif op == "fmt_append":
+                spark.createDataFrame(arg, "k long, v long").write.format(
+                    "versioned_table"
+                ).mode("append").option("path", path).save()
+                model = model + arg
+            elif op == "slice_append":
+                V.stage_slices(
+                    spark.createDataFrame(arg, "k long, v long"),
+                    path,
+                    [("s", F.lit(True))],
+                ).commit("s", "append")
                 model = model + arg
             elif op == "delete":
                 keys = sorted(set(arg))
@@ -1053,6 +1074,11 @@ def test_model_based_rename_partition_sequences(spark, tmp_path):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
+    from end_to_end_database_pipeline_project_spark.sources.versioned_source import (
+        register,
+    )
+
+    register(spark)
     KEYS = list(range(6))
     NAME_POOL = ["w1", "w2", "w3"]
     rows_st = st.lists(
@@ -1609,7 +1635,7 @@ def test_maybe_compact_bounds_plan_depth_over_200_commits(spark, tmp_path):
         # commit, so all 200 commits stay in the default run
         f = os.path.join(scratch, f"c{i}.parquet")
         pq.write_table(pa.table({"x": pa.array([i], pa.int64())}), f)
-        V.adopt_staged_files(path, [f], "append", 1)
+        V.adopt_staged_files(path, [V._StagedPart(f, "", 1, {})], "append")
         if V.maybe_compact(spark, path, MAX_CHAIN) is not None:
             compactions += 1
         max_seen = max(max_seen, V.chain_length(path))
@@ -1640,7 +1666,9 @@ def _adopt_race_worker(table: str, scratch: str, barrier, worker: int) -> None:
     f = os.path.join(scratch, f"w{worker}.parquet")
     pq.write_table(pa.table({"x": pa.array([worker], pa.int64())}), f)
     barrier.wait(timeout=30)
-    V.adopt_staged_files(table, [f], "append", 1, meta={"writer": worker})
+    V.adopt_staged_files(
+        table, [V._StagedPart(f, "", 1, {})], "append", {"writer": worker}
+    )
 
 
 def test_concurrent_process_commits_yield_consecutive_versions(
@@ -1739,7 +1767,9 @@ def _pia_race_worker(table: str, scratch: str, barrier, worker: int) -> None:
     f = os.path.join(scratch, f"p{worker}.parquet")
     pq.write_table(pa.table({"x": pa.array([worker], pa.int64())}), f)
     barrier.wait(timeout=30)
-    V.adopt_staged_files(table, [f], "append", 1, meta={"writer": worker})
+    V.adopt_staged_files(
+        table, [V._StagedPart(f, "", 1, {})], "append", {"writer": worker}
+    )
 
 
 def test_put_if_absent_coordinator_full_protocol_race(spark, tmp_path):
@@ -2382,9 +2412,10 @@ def test_stage_slices_overlapping_conditions_first_match_wins(spark, tmp_path):
 
 
 def _aggregate_manifest_stats(spark, path: str, entry: dict, cols) -> dict:
-    """What a ``groupBy(input_file_name())`` aggregate over a committed
-    version records: rows, commit-level stats and per-file stats, in
-    the manifest's serialized form (files with no rows are absent)."""
+    """What Spark's own aggregates over a committed version record:
+    rows, commit-level stats (one min/max over the whole version) and
+    per-file stats (``groupBy(input_file_name())``), in the manifest's
+    serialized form (files with no rows are absent)."""
     from urllib.parse import unquote, urlparse
 
     vdir = os.path.join(path, entry["dir"])
@@ -2400,14 +2431,14 @@ def _aggregate_manifest_stats(spark, path: str, entry: dict, cols) -> dict:
     out: dict = {"rows": sum(r["__rows"] for r in per_file)}
     if not per_file:
         return out
-    out["stats"] = {}
-    for c in cols:
-        los = [r[f"__min_{c}"] for r in per_file if r[f"__min_{c}"] is not None]
-        his = [r[f"__max_{c}"] for r in per_file if r[f"__max_{c}"] is not None]
-        out["stats"][c] = {
-            "min": V._stat_value(min(los)) if los else None,
-            "max": V._stat_value(max(his)) if his else None,
+    whole = spark.read.parquet(vdir).agg(*aggs[1:]).first()
+    out["stats"] = {
+        c: {
+            "min": V._stat_value(whole[f"__min_{c}"]),
+            "max": V._stat_value(whole[f"__max_{c}"]),
         }
+        for c in cols
+    }
     out["file_stats"] = {
         os.path.relpath(unquote(urlparse(r["__file"]).path), vdir): {
             c: {

@@ -208,3 +208,103 @@ def test_format_overwrite_rebases_lineage_and_reattach(spark, tmp_path):
     out2, ckpt2 = str(tmp_path / "out2"), str(tmp_path / "ckpt2")
     s = _drain_stream(spark, path, out2, ckpt2, startingversion="3")
     assert sorted((r.k, r.v) for r in s.collect()) == [(10, 100)]
+
+
+# --- one manifest entry, whichever writer lands it --------------------
+
+
+def _three_writers(spark, tmp_path, name, df, stats=(), partition_by=()):
+    """``df`` committed as a full snapshot by ``write_version``, by a
+    one-slice ``stage_slices`` commit and by the format batch writer:
+    the three manifest entries."""
+    register(spark)
+    lib, sl, fmt = (str(tmp_path / f"{name}_{w}") for w in ("lib", "sl", "fmt"))
+    V.write_version(df, lib, stats_cols=stats, partition_by=partition_by)
+    V.stage_slices(df, sl, [("all", F.lit(True))], partition_by).commit(
+        "all", "full"
+    )
+    w = df.write.format("versioned_table").mode("overwrite").option("path", fmt)
+    if stats:
+        w = w.option("statscols", ",".join(stats))
+    if partition_by:
+        w = w.option("partitionby", ",".join(partition_by))
+    w.save()
+    return [V.versions(p)[-1] for p in (lib, sl, fmt)]
+
+
+def _comparable(entry: dict, with_stats: bool = True) -> dict:
+    """A manifest entry without its commit time and file UUIDs:
+    ``file_stats`` values grouped by hive dir."""
+    import json
+    import posixpath
+
+    out = {
+        k: entry.get(k)
+        for k in ("rows", "mode", "partition_by", "partition_dirs")
+    }
+    if with_stats:
+        # JSON form: a NaN stat compares equal to itself
+        out["stats"] = json.dumps(entry.get("stats"), sort_keys=True)
+        by_dir: dict = {}
+        for rel, st in (entry.get("file_stats") or {}).items():
+            by_dir.setdefault(posixpath.dirname(rel), []).append(
+                json.dumps(st, sort_keys=True)
+            )
+        out["file_stats"] = {d: sorted(v) for d, v in by_dir.items()}
+    return out
+
+
+def _assert_same_entries(entries) -> None:
+    lib, sl, fmt = entries
+    assert _comparable(fmt) == _comparable(lib)
+    assert _comparable(sl, False) == _comparable(lib, False)
+
+
+def _frame(spark):
+    # two input partitions: column n is all NULL in the first file, z
+    # is all NULL everywhere, x holds a NaN
+    return spark.range(0, 12, 1, 2).select(
+        F.col("id").alias("k"),
+        (F.col("id") % 3).cast("string").alias("p"),
+        F.when(F.col("id") >= 6, F.col("id") * 10).alias("n"),
+        F.lit(None).cast("long").alias("z"),
+        F.when(F.col("id") == 4, F.lit(float("nan")))
+        .otherwise(F.col("id") / 2)
+        .alias("x"),
+        F.expr("date_add(date'2024-02-27', cast(id AS int))").alias("d"),
+    )
+
+
+STATS = ("k", "n", "z", "x", "d")
+
+
+def test_three_writers_flat_entries_match(spark, tmp_path):
+    entries = _three_writers(spark, tmp_path, "flat", _frame(spark), STATS)
+    _assert_same_entries(entries)
+    lib = entries[0]
+    assert lib["rows"] == 12 and "partition_by" not in lib
+    assert lib["stats"]["z"] == {"min": None, "max": None}
+    assert any(
+        st["n"] == {"min": None, "max": None}
+        for st in lib["file_stats"].values()
+    )
+
+
+def test_three_writers_partitioned_entries_match(spark, tmp_path):
+    entries = _three_writers(
+        spark, tmp_path, "part", _frame(spark), STATS, ("p",)
+    )
+    _assert_same_entries(entries)
+    lib = entries[0]
+    assert lib["partition_by"] == ["p"]
+    assert lib["partition_dirs"] == ["p=0", "p=1", "p=2"]
+
+
+def test_three_writers_empty_entries_match(spark, tmp_path):
+    empty = _frame(spark).where("k < 0")
+    for name, pby in (("eflat", ()), ("epart", ("p",))):
+        entries = _three_writers(spark, tmp_path, name, empty, STATS, pby)
+        _assert_same_entries(entries)
+        lib = entries[0]
+        assert lib["rows"] == 0
+        assert "stats" not in lib and "partition_by" not in lib

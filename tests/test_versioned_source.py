@@ -1657,3 +1657,74 @@ def test_file_uri_paths_and_sql_view_bridge(spark, tmp_path):
         spark.sql("SELECT s FROM vt_bridge WHERE x = 2").collect()[0].s == "b"
     )
     spark.catalog.dropTempView("vt_bridge")
+
+
+# --- pushed filters over per-file stats -------------------------------
+
+
+def _write_both_ways(spark, tmp_path, name, batches, ddl, stats):
+    """The same commits written by the library writer and by the format
+    writer: ``{writer: table path}``."""
+    register(spark)
+    out = {}
+    for writer in ("library", "format"):
+        path = str(tmp_path / f"{name}_{writer}")
+        for i, rows in enumerate(batches):
+            df = spark.createDataFrame(rows, ddl)
+            if writer == "library":
+                commit = V.write_version if i == 0 else V.append_version
+                commit(df, path, stats_cols=(stats,))
+            else:
+                df.write.format("versioned_table").option("path", path).option(
+                    "statscols", stats
+                ).mode("overwrite" if i == 0 else "append").save()
+        out[writer] = path
+    return out
+
+
+def test_format_read_when_filters_prune_every_file(spark, tmp_path):
+    """A pushed filter whose stats prune every file plans no partition;
+    the read returns an empty result instead of failing."""
+    tables = _write_both_ways(
+        spark, tmp_path, "pa", [[(1, "a")], [(2, "b")]], DDL, "x"
+    )
+    for writer, path in tables.items():
+        got = (
+            spark.read.format("versioned_table")
+            .option("path", path)
+            .load()
+            .where("x > 5")
+            .collect()
+        )
+        assert got == [], writer
+
+
+def test_nan_stats_never_prune_matching_rows(spark, tmp_path):
+    """A double stats column holding NaN: Spark orders NaN above every
+    value, so a file's max is NaN and the file must survive ``>``,
+    ``>=``, ``=`` and ``IN`` filters that a NaN row satisfies. Results
+    through the format read equal ``df.where`` on the source rows, for
+    tables written by both writers; an all-NaN file is covered too."""
+    import math
+
+    nan = float("nan")
+    batches = [[(1, 1.0), (2, nan)], [(3, 9.0)], [(4, nan), (5, nan)]]
+    ddl = "k long, x double"
+    tables = _write_both_ways(spark, tmp_path, "nan", batches, ddl, "x")
+    source = spark.createDataFrame([r for b in batches for r in b], ddl)
+    conds = [
+        F.col("x") > 1.5,
+        F.col("x") >= 9.0,
+        F.col("x") == nan,
+        F.col("x").isin(nan, 9.0),
+        F.col("x") < 2.0,
+    ]
+    wants = [sorted(r.k for r in source.where(c).collect()) for c in conds]
+    for writer, path in tables.items():
+        e = V.versions(path)[0]
+        assert math.isnan(e["stats"]["x"]["max"]), writer
+        assert e["stats"]["x"]["min"] == 1.0, writer
+        fmt = spark.read.format("versioned_table").option("path", path).load()
+        for cond, want in zip(conds, wants):
+            got = sorted(r.k for r in fmt.where(cond).collect())
+            assert got == want, (writer, str(cond))
