@@ -1574,14 +1574,14 @@ def versioned_date_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFr
     and both prune granularities must understand it:
 
     - the LIBRARY read takes natural ``datetime.date`` prune bounds
-      (coerced to the manifest's ISO form instead of raising) and
+      (compared by value against each dir's parsed date) and
       opens only the month directories inside [lo, hi] —
       ``lib_dirs_pruned`` is computed from the plan's actual
       inputFiles and must be TRUE;
     - the same slice through the ``versioned_table`` FORMAT pushes the
       ``o_month BETWEEN DATE...`` comparisons into the Python
-      DataSource, whose ``_raw_matches`` now parses hive's ISO date
-      strings (a date filter previously kept every dir).
+      DataSource, which skips dirs by the same ``_may_match`` rule
+      (hive's ISO date strings parsed into the filter's date).
 
     The reference's daily/monthly rollup tables are exactly this shape
     (clickhouse_etl.py:301-456 date-keyed gold tables); at 100 TB a

@@ -26,14 +26,19 @@ _SHIPPED_SESSIONS: set[int] = set()
 
 
 def ship_package(spark: SparkSession) -> None:
-    """Make this package importable on executor Python workers.
+    """Make this package importable on every Python worker.
 
-    Pandas-UDF / mapInPandas closures that reference module-level
-    functions are pickled *by reference* — workers must import the
-    module. On a real cluster that's ``--py-files``; here we zip the
-    package once per session and ``addPyFile`` it, which covers any
+    Pandas-UDF / mapInPandas closures and Python data sources that
+    reference module-level code are pickled *by reference* — workers
+    must import the module. On a real cluster that's ``--py-files``;
+    here we zip the package once per process, ``addPyFile`` it (task
+    workers) and put it on the workers' ``PYTHONPATH``
+    (``add_worker_path``: the streaming-source runner ignores addPyFile
+    includes). This covers any
     externally-created SparkSession (e.g. the driver harness) whose
-    working directory is not the repo root."""
+    working directory is not the repo root. Python functions created
+    before the first call keep their old environment, so a caller
+    ships before it registers a data source or builds a UDF."""
     if id(spark) in _SHIPPED_SESSIONS:
         return
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
@@ -55,7 +60,21 @@ def ship_package(spark: SparkSession) -> None:
                         zf.write(full, rel)
         os.replace(tmp, zip_path)
     spark.sparkContext.addPyFile(zip_path)
+    add_worker_path(spark, zip_path)
     _SHIPPED_SESSIONS.add(id(spark))
+
+
+def add_worker_path(spark: SparkSession, entry: str) -> None:
+    """Prepend ``entry`` to ``PYTHONPATH`` in
+    ``sparkContext.environment`` — the env map copied into every Python
+    function created from now on and exported to its worker processes.
+    It is the one channel that reaches ALL Python workers: the
+    streaming-source runner and the streaming driver worker never
+    process addPyFile includes."""
+    env = spark.sparkContext.environment
+    pp = env.get("PYTHONPATH", "")
+    if entry not in pp.split(os.pathsep):
+        env["PYTHONPATH"] = entry + os.pathsep + pp if pp else entry
 
 
 def get_spark(

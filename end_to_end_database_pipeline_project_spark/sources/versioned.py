@@ -122,16 +122,25 @@ def _mode(entry: dict) -> str:
     return entry.get("mode", "full")
 
 
+# the ``_change_type`` of a change-feed row, by its commit's mode; a
+# full snapshot appears in a feed only as a fresh consumer's leading base
+_CHANGE_TYPE = {
+    "append": "insert",
+    "full": "insert",
+    "delete": "delete",
+    "replace": "upsert",
+}
+
+
 def _stat_value(v):
-    """JSON-serializable form of a min/max stat (dates/timestamps →
-    ISO strings, Decimals → str; orderable as strings per type).
-    Tz-aware timestamps normalize to NAIVE UTC before serializing so
-    every manifest timestamp stat shares ONE form — a table written
-    through both the library (collect() → naive) and the format writer
-    (pyarrow min_max → tz-aware) must not mix '...+00:00' with naive
-    ISO strings, or the lexicographic-order invariant `_overlaps` /
-    `_file_overlaps` / `_stats_match` rely on breaks at boundary-equal
-    prunes (ADVICE r09)."""
+    """JSON-serializable form of a min/max stat: dates/timestamps →
+    ISO strings, Decimals → ``str`` (which does NOT order as the
+    number: ``"12.00" < "9.00"``, so readers never compare these
+    strings directly — ``_may_match`` parses them back into the
+    predicate value's type). Tz-aware timestamps normalize to NAIVE
+    UTC before serializing so every manifest timestamp stat shares ONE
+    form, whichever writer recorded it (the library collects naive
+    values, the format writer's pyarrow min_max tz-aware ones)."""
     import datetime
     import decimal
 
@@ -597,19 +606,6 @@ def _file_min_max(md, j, dt):
     return lo, hi
 
 
-def _file_overlaps(entry: dict, rel_file: str, col: str, lo, hi) -> bool:
-    """Can this committed FILE contain a row with ``col`` in [lo, hi]?
-    Missing file_stats (or the column unrecorded) → True: must read.
-    Same serialized-form comparison as the commit-level ``_overlaps``."""
-    st = entry.get("file_stats", {}).get(rel_file, {}).get(col)
-    if st is None:
-        return True
-    mn, mx = st["min"], st["max"]
-    if mn is None or mx is None:  # all-NULL file for the column
-        return False
-    return not (mx < lo or mn > hi)
-
-
 def _partition_value(rel_dir: str, col: str) -> str | None:
     """The raw hive value of ``col`` in a relative partition dir, or
     None if the dir doesn't carry that column."""
@@ -622,72 +618,139 @@ def _partition_value(rel_dir: str, col: str) -> str | None:
     return None
 
 
-def _temporal(v):
-    """Parse an ISO date/datetime string to a NAIVE datetime for
-    temporal comparison (hive serializes timestamps with a space
-    separator, which sorts differently from isoformat's 'T' — parsing
-    normalizes both; tz-aware forms collapse to naive UTC, matching
-    `_stat_value`'s serialized form). None when not temporal."""
+def _hive_stat(raw: str | None) -> dict | None:
+    """A hive dir's raw value of a column as recorded ``{min, max}``:
+    the value twice, ``None`` twice for the NULL partition, and None
+    (not recorded) when the dir does not carry the column."""
+    if raw is None:
+        return None
+    v = None if raw == "__HIVE_DEFAULT_PARTITION__" else raw
+    return {"min": v, "max": v}
+
+
+def _number(v):
+    """``v`` as a number to compare (a string parses exactly, as a
+    Decimal; a NaN becomes float NaN), or None when it is not one."""
+    import decimal
+
+    if isinstance(v, bool):
+        return None
+    if isinstance(v, str):
+        try:
+            v = decimal.Decimal(v)
+        except decimal.InvalidOperation:
+            return None
+    if isinstance(v, decimal.Decimal) and v.is_nan():
+        return float("nan")
+    return v if isinstance(v, (int, float, decimal.Decimal)) else None
+
+
+def _instant(v):
+    """A date, datetime or ISO string (``T`` or hive's space
+    separator) as ``(naive-UTC datetime, is_date)``, or None when it is
+    not one. A date is its midnight."""
     import datetime
 
-    if not isinstance(v, str) or len(v) < 10 or v[4:5] != "-":
-        return None
-    try:
-        d = datetime.datetime.fromisoformat(v)
-    except ValueError:
+    if isinstance(v, str):
+        try:
+            d = datetime.datetime.fromisoformat(v)
+        except ValueError:
+            return None
+        is_date = "T" not in v and " " not in v
+    elif isinstance(v, datetime.datetime):
+        d, is_date = v, False
+    elif isinstance(v, datetime.date):
+        d, is_date = datetime.datetime.combine(v, datetime.time()), True
+    else:
         return None
     if d.tzinfo is not None:
         d = d.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-    return d
+    return d, is_date
 
 
-def _partition_dir_overlaps(rel_dir: str, col: str, lo, hi) -> bool:
-    """Can files under this partition dir contain a row with ``col``
-    in [lo, hi]? The dir value is a hive STRING — coerce it to the
-    bound's type (int/float bounds parse the string; ISO date/datetime
-    bounds — the serialized form ``read_version`` coerces date-typed
-    prune bounds to — compare temporally, so date-partitioned layouts
-    prune at dir granularity too; anything unparseable keeps the dir:
-    pruning is a performance fact, never a correctness input). A NULL
-    partition (__HIVE_DEFAULT_PARTITION__) is outside every range — a
-    BETWEEN filter drops NULLs anyway."""
-    raw = _partition_value(rel_dir, col)
-    if raw is None:
-        return True  # dir doesn't carry the column: must read
-    if raw == "__HIVE_DEFAULT_PARTITION__":
+def _common(rec, value):
+    """A recorded bound (a manifest stat or a hive dir string) and a
+    predicate value in the domain of ``value``'s type, as
+    ``(rec_lo, rec_hi, value)``; None when ``rec`` does not parse
+    there. Numbers compare exactly, or as doubles when either side is
+    a float (Spark's promotion); temporals as naive-UTC datetimes,
+    where a date-only ``rec`` spans its whole day against a
+    timestamp value."""
+    import datetime
+
+    if isinstance(value, bool):
+        r = {"true": True, "false": False}.get(rec) if isinstance(rec, str) else rec
+        return (r, r, value) if isinstance(r, bool) else None
+    if isinstance(value, datetime.date):
+        r, v = _instant(rec), _instant(value)
+        if r is None:
+            return None
+        end = r[0]
+        if r[1] and not v[1]:
+            end += datetime.timedelta(days=1, microseconds=-1)
+        return r[0], end, v[0]
+    if isinstance(value, str) and isinstance(rec, str):
+        return rec, rec, value
+    r, v = _number(rec), _number(value)
+    if r is None or v is None:
+        return None
+    if isinstance(r, float) or isinstance(v, float):
+        r, v = float(r), float(v)
+    return r, r, v
+
+
+def _may_match(lo, hi, op: str, value) -> bool:
+    """The one data-skipping rule of the versioned table — for commit
+    stats, per-file stats and hive partition dirs, for library and
+    format reads: can a commit, file or dir whose recorded values of a
+    column lie in ``[lo, hi]`` hold a row where ``column <op> value``?
+    ``op`` is ``=``, ``>``, ``>=``, ``<``, ``<=`` or ``in`` (``value``
+    is then the list). A dir records ``lo == hi == raw``; ``(None,
+    None)`` — all-NULL stats, the NULL partition — matches no
+    comparison. Each bound is parsed into the predicate value's type
+    (``_common``) and compared; a bound that does not parse, or a NaN
+    on either side (Spark orders NaN above every value), keeps the
+    range. A string value on a string range may also stand for the
+    number or instant Spark casts it to on a numeric or temporal
+    column, so the range is kept when any such reading matches.
+    Pruning is a performance fact, never a correctness input: every
+    reader re-applies the predicate to the rows it reads."""
+    if op == "in":
+        return any(_may_match(lo, hi, "=", v) for v in value)
+    if lo is None or hi is None:
         return False
-    val: object = raw
-    if isinstance(lo, bool) or isinstance(hi, bool):
-        return True  # no meaningful range on booleans: read
-    if isinstance(lo, int) and isinstance(hi, int):
-        try:
-            val = int(raw)
-        except ValueError:
-            return True
-    elif isinstance(lo, (int, float)) and isinstance(hi, (int, float)):
-        try:
-            val = float(raw)
-        except ValueError:
-            return True
-    elif isinstance(lo, str) and isinstance(hi, str):
-        tlo, thi, tval = _temporal(lo), _temporal(hi), _temporal(raw)
-        if tlo is not None and thi is not None:
-            if tval is None:
-                return True  # temporal bounds, non-temporal dir: read
-            # a DATE dir value covers the whole day when the bounds are
-            # timestamps — widen its range to [00:00, next-day) so a
-            # mid-day bound never wrongly prunes the day's directory
-            import datetime
+    a, b = _common(lo, value), _common(hi, value)
+    if a is None or b is None:
+        return True
+    r_lo, r_hi, v = a[0], b[1], a[2]
+    if r_lo != r_lo or r_hi != r_hi or v != v:
+        return True
+    hit = {
+        "=": r_lo <= v <= r_hi,
+        ">": r_hi > v,
+        ">=": r_hi >= v,
+        "<": r_lo < v,
+        "<=": r_lo <= v,
+    }[op]
+    if hit or not all(isinstance(x, str) for x in (lo, hi, value)):
+        return hit
+    inst = _instant(value)
+    day = inst and (inst[0].date() if inst[1] else inst[0])
+    return any(
+        alt is not None
+        and _common(lo, alt) is not None
+        and _common(hi, alt) is not None
+        and _may_match(lo, hi, op, alt)
+        for alt in (_number(value), day)
+    )
 
-            whole_day = len(raw) == 10
-            v_lo = tval
-            v_hi = (
-                tval + datetime.timedelta(days=1, microseconds=-1)
-                if whole_day
-                else tval
-            )
-            return not (v_hi < tlo or v_lo > thi)
-    return lo <= val <= hi  # type: ignore[operator]
+
+def _keeps(st: dict | None, preds) -> bool:
+    """``_may_match`` over a recorded ``{min, max}`` (None: not
+    recorded, so kept) for every ``(op, value)`` of ``preds``."""
+    return st is None or all(
+        _may_match(st["min"], st["max"], op, v) for op, v in preds
+    )
 
 
 def _aggregate_file_stats(
@@ -1484,20 +1547,6 @@ def _entry(vs: list[dict], path: str, version: int | None) -> dict:
     return match[0]
 
 
-def _overlaps(entry: dict, col: str, lo, hi) -> bool:
-    """Can this commit contain a row with ``col`` in [lo, hi]?
-    Unknown (no stats for the column) → True: must read. Stats are
-    compared in their manifest (JSON-serialized) form — ISO strings
-    for dates/timestamps order correctly lexicographically."""
-    st = entry.get("stats", {}).get(col)
-    if st is None:
-        return True
-    mn, mx = st["min"], st["max"]
-    if mn is None or mx is None:  # empty commit: nothing to miss
-        return False
-    return not (mx < lo or mn > hi)
-
-
 def _entry_df(
     spark: SparkSession, path: str, e: dict, prune: tuple | None
 ) -> DataFrame | None:
@@ -1512,18 +1561,18 @@ def _entry_df(
     - else **partition-dir pruning** when the pruned column is a hive
       partition key: only the overlapping directories are listed.
 
-    Reads go through basePath so partition columns reconstitute. Returns
-    None when everything prunes away. Pruning is a performance fact,
-    never a correctness input — callers always re-apply the BETWEEN
-    filter to whatever is read."""
+    ``prune`` is ``(col, preds)``, ``preds`` the ``(op, value)`` pairs
+    every kept file or dir may match (``_keeps``). Reads go through
+    basePath so partition columns reconstitute. Returns None when
+    everything prunes away. Pruning is a performance fact, never a
+    correctness input — callers always re-apply the BETWEEN filter to
+    whatever is read."""
     vdir = os.path.join(path, e["dir"])
     if prune is not None:
-        col, lo, hi = prune
+        col, preds = prune
         fs = e.get("file_stats") or {}
         if fs and any(col in v for v in fs.values()):
-            keep = [
-                rf for rf in sorted(fs) if _file_overlaps(e, rf, col, lo, hi)
-            ]
+            keep = [rf for rf in sorted(fs) if _keeps(fs[rf].get(col), preds)]
             if not keep:
                 return None
             if len(keep) < len(fs):
@@ -1533,7 +1582,9 @@ def _entry_df(
         elif e.get("partition_by") and col in e["partition_by"]:
             dirs = e.get("partition_dirs", [])
             keep_d = [
-                d for d in dirs if _partition_dir_overlaps(d, col, lo, hi)
+                d
+                for d in dirs
+                if _keeps(_hive_stat(_partition_value(d, col)), preds)
             ]
             if not keep_d:
                 return None
@@ -1542,6 +1593,17 @@ def _entry_df(
                     *[os.path.join(vdir, d) for d in keep_d]
                 )
     return spark.read.parquet(vdir)
+
+
+def _between(prune: tuple):
+    """The row filter of a library ``prune=(col, lo, hi)``. Bounds go
+    to Spark in their manifest form (``_stat_value``) and Spark casts
+    them to the column's type: a naive datetime is then read in the
+    session time zone, not in the driver process's local one."""
+    from pyspark.sql import functions as F
+
+    col, lo, hi = prune
+    return F.col(col).between(_stat_value(lo), _stat_value(hi))
 
 
 def read_version(
@@ -1571,26 +1633,25 @@ def read_version(
     without stats is simply read and filtered.
     Tombstones are skipped only when their key-range stats prove it
     safe (the pruned column IS the tombstone key and the ranges are
-    disjoint); otherwise they are always applied. Bounds are compared
-    in the manifest's serialized form (ISO strings for dates) —
-    ``datetime.date``/``datetime``/``Decimal`` bounds are coerced to
-    that form here, so the natural ``prune=("d", date(...), date(...))``
-    call Just Works (VERDICT r09 "What's wrong #1").
+    disjoint); otherwise they are always applied. Bounds keep their
+    Python type: every skip — commit stats, file stats, partition dirs
+    — is one ``_may_match`` call (the rule the format reader shares),
+    which parses each recorded value into the bound's type, so
+    ``date``/``datetime``/``Decimal`` bounds compare by value
+    (``Decimal("9.00")`` is below ``12.00``), and a bound that does not
+    parse against a recorded value keeps the commit, file or dir.
 
     ``as_of`` is TIMESTAMP AS OF (Delta's timestampAsOf): epoch
     seconds or a datetime (naive = UTC), resolved to the latest commit
     at or before it via ``version_at_timestamp`` — mutually exclusive
     with ``version``."""
-    from pyspark.sql import functions as F
-
     if as_of is not None:
         if version is not None:
             raise ValueError(
                 "read_version: pass either version or as_of, not both"
             )
         version = version_at_timestamp(path, as_of)
-    if prune is not None:
-        prune = (prune[0], _stat_value(prune[1]), _stat_value(prune[2]))
+    preds = () if prune is None else ((">=", prune[1]), ("<=", prune[2]))
     vs = versions(path)
     entry = _entry(vs, path, version)
     chain = _chain(vs, entry, path)
@@ -1607,19 +1668,16 @@ def read_version(
         ren = {k: v for k, v in smap.items() if v is not None}
         dropped = [k for k, v in smap.items() if v is None]
         inv = {new: old for old, new in ren.items()}
-        lprune = prune
+        lprune = None
         if prune is not None:
-            col, lo, hi = prune
-            lcol = inv.get(col, col)
-            lprune = (lcol, lo, hi)
-            if mode in ("delete", "replace"):
-                # a tombstone/upsert is skippable only when its KEY is
-                # the pruned column and its key range cannot touch
-                # [lo, hi]: then neither its deletes nor its (filtered)
-                # inserts can affect rows in the range
-                if e["key"] == lcol and not _overlaps(e, lcol, lo, hi):
-                    continue
-            elif not _overlaps(e, lcol, lo, hi):
+            lcol = inv.get(prune[0], prune[0])
+            lprune = (lcol, preds)
+            # a tombstone/upsert is skippable only when its KEY is the
+            # pruned column and its key range cannot touch [lo, hi]:
+            # then neither its deletes nor its (filtered) inserts can
+            # affect rows in the range
+            skippable = mode not in ("delete", "replace") or e["key"] == lcol
+            if skippable and not _keeps(e.get("stats", {}).get(lcol), preds):
                 continue
         if mode == "delete":
             # chain starts with a full snapshot; a pruned-empty chain
@@ -1664,7 +1722,7 @@ def read_version(
                 # column — its rows are all NULL there, outside any
                 # range, so the whole commit drops out
                 continue
-            df = df.where(F.col(prune[0]).between(prune[1], prune[2]))
+            df = df.where(_between(prune))
         # allowMissingColumns: appends may add columns (schema
         # evolution) — earlier rows read NULL for them; union type
         # coercion widens mismatched commits (int→long, float→double)
@@ -1727,12 +1785,11 @@ def incremental_scan(
     a row's old and new image, so out-of-range keys provably can't
     touch the slice); on any other column they are delivered whole —
     an upsert may move a row INTO or OUT OF the range, and the
-    consumer needs the key either way. Bounds coerce to the manifest's
-    serialized form (dates → ISO strings), as in ``read_version``."""
+    consumer needs the key either way. Bounds compare by value through
+    ``_may_match``, as in ``read_version``."""
     from pyspark.sql import functions as F
 
-    if prune is not None:
-        prune = (prune[0], _stat_value(prune[1]), _stat_value(prune[2]))
+    preds = () if prune is None else ((">=", prune[1]), ("<=", prune[2]))
     vs = versions(path)
     start = _entry(vs, path, from_version)  # validates it is committed
     end = _entry(vs, path, to_version)
@@ -1767,7 +1824,6 @@ def incremental_scan(
             base.withColumn("_commit_version", F.lit(None).cast("long"))
             .withColumn("_change_type", F.lit(None).cast("string"))
         )
-    change_of = {"delete": "delete", "replace": "upsert", "append": "insert"}
     out = None
     for j, e in enumerate(rng):
         m = _mode(e)
@@ -1780,17 +1836,14 @@ def incremental_scan(
         ren = {k: v for k, v in smap.items() if v is not None}
         dropped = [k for k, v in smap.items() if v is None]
         inv = {new: old for old, new in ren.items()}
-        lprune = prune
+        lprune = None
         if prune is not None:
-            col, lo, hi = prune
-            lcol = inv.get(col, col)
-            lprune = (lcol, lo, hi)
-            if m in ("delete", "replace"):
-                # key-only pruning: safe because a key is identical in
-                # a row's old and new image
-                if e["key"] == lcol and not _overlaps(e, lcol, lo, hi):
-                    continue
-            elif not _overlaps(e, lcol, lo, hi):
+            lcol = inv.get(prune[0], prune[0])
+            lprune = (lcol, preds)
+            # key-only pruning: safe because a key is identical in a
+            # row's old and new image
+            skippable = m not in ("delete", "replace") or e["key"] == lcol
+            if skippable and not _keeps(e.get("stats", {}).get(lcol), preds):
                 continue
         key_prunable = m == "append" or (
             lprune is not None and e.get("key") == lprune[0]
@@ -1807,8 +1860,8 @@ def incremental_scan(
         if prune is not None and key_prunable:
             if prune[0] not in df.columns:
                 continue  # commit predates the column: all NULL there
-            df = df.where(F.col(prune[0]).between(prune[1], prune[2]))
-        part = stamp(df, e, change_of[m])
+            df = df.where(_between(prune))
+        part = stamp(df, e, _CHANGE_TYPE[m])
         out = (
             part
             if out is None

@@ -9,7 +9,10 @@ same manifest protocol as a *format*, so ANY Spark pipeline can say
     spark.readStream.format("versioned_table").option("path", p)...
 
 - **Batch read**: the pinned (or latest) version, chain-resolved in
-  EXECUTORS — one input partition per committed data file. Tombstone
+  EXECUTORS — one input partition per committed data file. Pushed
+  comparison filters skip files by their hive dir and per-file stats
+  through the library's one rule (``_may_match``: each recorded value
+  parsed into the filter value's type). Tombstone
   commits ship as FILE PATHS in the partition (never materialized on
   the driver), loaded executor-side and applied as a vectorized Arrow
   ``is_in`` mask — a large erasure batch costs the executors one small
@@ -59,7 +62,8 @@ column the written schema lacks gets no stat, an all-NULL one
 columns — tasks dynamic-partition their Arrow batches into hive
 subdirs and the manifest records ``partition_by``/``partition_dirs``
 exactly as the library writer does, so format-written tables prune
-partition dirs on read), ``maxversionspertrigger`` (stream: cap each
+partition dirs on read, by the same ``_may_match`` rule as
+``read_version``), ``maxversionspertrigger`` (stream: cap each
 micro-batch AFTER the first of a run at N committed versions —
 Delta's maxFilesPerTrigger analog at commit granularity, bounding
 steady-state batch latency; the run's first batch is planned before
@@ -113,15 +117,24 @@ from pyspark.sql.datasource import (
     DataSourceReader,
     DataSourceStreamArrowWriter,
     DataSourceStreamReader,
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    In,
     InputPartition,
+    LessThan,
+    LessThanOrEqual,
     WriterCommitMessage,
 )
 
 from .versioned import (
     _bound,
     _chain,
+    _CHANGE_TYPE,
     _compose_schema_map,
     _entry,
+    _hive_stat,
+    _keeps,
     _mode,
     _stat_value,
     _StagedPart,
@@ -130,6 +143,16 @@ from .versioned import (
     version_before_timestamp,
     versions,
 )
+
+# the pushed filter classes ``_may_match`` decides on, by its op name
+_FILTER_OPS = {
+    EqualTo: "=",
+    GreaterThan: ">",
+    GreaterThanOrEqual: ">=",
+    LessThan: "<",
+    LessThanOrEqual: "<=",
+    In: "in",
+}
 
 
 def _opt_path(options: dict) -> str:
@@ -536,155 +559,6 @@ def _read_file_batches(
         yield from tbl.to_batches()
 
 
-def _raw_matches(raw: str, flt) -> bool:
-    """Does a hive partition value (raw string) satisfy one pushed
-    filter? Unknown/unparseable → True (pruning is performance, never
-    correctness: Spark re-applies every filter post-scan)."""
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        In,
-        LessThan,
-        LessThanOrEqual,
-    )
-
-    if raw == "__HIVE_DEFAULT_PARTITION__":
-        # NULL partition: every COMPARISON filter is non-matching.
-        # Guard (VERDICT r10 "What's wrong #3"): this branch is only
-        # sound because ``pushFilters`` records nothing but the six
-        # comparison types — an IsNull/IsNotNull filter must NEVER be
-        # routed here (IsNull *matches* this dir), so any future
-        # pushdown widening has to special-case null tests before this
-        # function. Pinned by test_raw_matches_never_sees_null_tests.
-        return False
-
-    def coerce(ref):
-        """The dir's raw hive string parsed to the filter value's own
-        type (so the comparison below is like-with-like), or None to
-        keep the dir."""
-        import datetime
-        import decimal
-
-        if isinstance(ref, bool) or ref is None:
-            return None
-        if isinstance(ref, int):
-            try:
-                return int(raw)
-            except ValueError:
-                return None
-        if isinstance(ref, float):
-            try:
-                return float(raw)
-            except ValueError:
-                return None
-        if isinstance(ref, str):
-            return raw
-        if isinstance(ref, datetime.datetime):
-            # hive serializes timestamps with a space separator;
-            # fromisoformat accepts both. Compare naive-UTC to naive-UTC
-            # (ref from Spark's pushed filter is session-TZ=UTC)
-            try:
-                d = datetime.datetime.fromisoformat(raw)
-            except ValueError:
-                return None
-            if (d.tzinfo is None) != (ref.tzinfo is None):
-                utc = datetime.timezone.utc
-                d = d.replace(tzinfo=utc) if d.tzinfo is None else d
-                d = d if ref.tzinfo is not None else d.astimezone(utc).replace(tzinfo=None)
-            return d
-        if isinstance(ref, datetime.date):
-            # date-partitioned dirs are the 100-TB norm (VERDICT r09
-            # "What's missing #2"): a WHERE day = DATE'...' through the
-            # format now prunes at dir granularity, not only per-file
-            try:
-                return datetime.date.fromisoformat(raw)
-            except ValueError:
-                return None
-        if isinstance(ref, decimal.Decimal):
-            try:
-                return decimal.Decimal(raw)
-            except decimal.InvalidOperation:
-                return None
-        return None  # unknown filter type: don't guess, keep the dir
-
-    if isinstance(flt, In):
-        for c in flt.value:
-            v = coerce(c)
-            if v is None or v == c:
-                return True
-        return False
-    v = coerce(flt.value)
-    if v is None:
-        return True
-    if isinstance(flt, EqualTo):
-        return v == flt.value
-    if isinstance(flt, GreaterThan):
-        return v > flt.value
-    if isinstance(flt, GreaterThanOrEqual):
-        return v >= flt.value
-    if isinstance(flt, LessThan):
-        return v < flt.value
-    if isinstance(flt, LessThanOrEqual):
-        return v <= flt.value
-    return True
-
-
-def _stats_match(st: dict, flt) -> bool:
-    """Can a file whose recorded [min, max] is ``st`` contain a row
-    satisfying one pushed comparison filter? Unknown/incomparable →
-    True (pruning is performance, never correctness); so is a NaN
-    bound or filter value, since Spark orders NaN above every value
-    and Python compares it False both ways. Filter values coerce to
-    the manifest's serialized form (dates/decimals → the same ISO/str
-    forms ``_stat_value`` wrote)."""
-    from pyspark.sql.datasource import (
-        EqualTo,
-        GreaterThan,
-        GreaterThanOrEqual,
-        In,
-        LessThan,
-        LessThanOrEqual,
-    )
-
-    mn, mx = st.get("min"), st.get("max")
-    if mn is None or mx is None:
-        return False  # all-NULL file for the column: no comparison matches
-    if mn != mn or mx != mx:
-        return True  # NaN bound
-
-    def ser(v):
-        s = _stat_value(v)
-        # only compare like with like: a type mismatch keeps the file
-        if isinstance(s, bool) or s is None or s != s:
-            return None
-        if isinstance(s, (int, float)) and isinstance(mn, (int, float)):
-            return s
-        if isinstance(s, str) and isinstance(mn, str):
-            return s
-        return None
-
-    if isinstance(flt, In):
-        outs = [ser(c) for c in flt.value]
-        return any(o is None for o in outs) or any(
-            mn <= o <= mx for o in outs if o is not None
-        )
-    v = ser(flt.value)
-    if v is None:
-        return True
-    if isinstance(flt, EqualTo):
-        return mn <= v <= mx
-    if isinstance(flt, GreaterThan):
-        return mx > v
-    if isinstance(flt, GreaterThanOrEqual):
-        return mx >= v
-    if isinstance(flt, LessThan):
-        return mn < v
-    if isinstance(flt, LessThanOrEqual):
-        return mn <= v
-    return True
-
-
 class _VersionedBatchReader(DataSourceReader):
     def __init__(self, options: dict, schema):
         self.path = _opt_path(options)
@@ -693,33 +567,20 @@ class _VersionedBatchReader(DataSourceReader):
         self.part_filters: list = []
 
     def pushFilters(self, filters):
-        """Partition pruning through the format: comparison filters on
-        hive partition columns are RECORDED for file skipping in
-        ``partitions()`` but ALL filters are returned to Spark (it
-        re-applies them post-scan), so pruning can only skip files,
-        never change results. At 100 TB a ``WHERE day = X`` through
-        the format then opens one partition dir per commit instead of
-        every live file."""
-        from pyspark.sql.datasource import (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            In,
-            LessThan,
-            LessThanOrEqual,
-        )
-
-        supported = (
-            EqualTo,
-            GreaterThan,
-            GreaterThanOrEqual,
-            LessThan,
-            LessThanOrEqual,
-            In,
-        )
+        """Data skipping through the format: each comparison filter on
+        one column is RECORDED once as ``(column, op, value)`` for
+        ``partitions()``, which skips partition dirs and files by
+        ``_may_match`` (the library's rule), but ALL filters are
+        returned to Spark (it re-applies them post-scan), so pruning
+        can only skip files, never change results. At 100 TB a
+        ``WHERE day = X`` through the format then opens one partition
+        dir per commit instead of every live file. Only comparisons are
+        recorded: the NULL partition matches none of them, while a
+        null test (IsNull, EqualNullSafe) would match it."""
         for f in filters:
-            if isinstance(f, supported) and len(f.attribute) == 1:
-                self.part_filters.append(f)
+            op = _FILTER_OPS.get(type(f))
+            if op is not None and len(f.attribute) == 1:
+                self.part_filters.append((f.attribute[0], op, f.value))
         return filters  # Spark still applies everything
 
     def partitions(self):
@@ -806,12 +667,7 @@ class _VersionedBatchReader(DataSourceReader):
                 rel = os.path.relpath(f, vdir).replace(os.sep, "/")
                 fst = fstats.get(rel, {})
                 pruned = False
-                for flt in self.part_filters:
-                    cur = flt.attribute[0]
-                    raw = part_of.get(cur)
-                    if raw is not None and not _raw_matches(raw, flt):
-                        pruned = True
-                        break
+                for cur, op, value in self.part_filters:
                     src = inv.get(cur, cur)
                     # stats of a dropped lineage — or of a rename
                     # SOURCE whose target isn't this filter's column —
@@ -819,11 +675,14 @@ class _VersionedBatchReader(DataSourceReader):
                     foreign = src in drops or (
                         src in ren and ren[src] != cur
                     )
-                    st = None if foreign else fst.get(src)
-                    if st is not None and not _stats_match(st, flt):
-                        # per-file [min, max] skipping (Delta's
-                        # stats-per-file): a range-clustered commit
-                        # serves a slice from the overlapping files
+                    # the file's hive dir, then its per-file [min, max]
+                    # (Delta's stats-per-file: a range-clustered commit
+                    # serves a slice from the overlapping files)
+                    recs = (
+                        _hive_stat(part_of.get(cur)),
+                        None if foreign else fst.get(src),
+                    )
+                    if not all(_keeps(r, ((op, value),)) for r in recs):
                         pruned = True
                         break
                 if not pruned:
@@ -842,6 +701,8 @@ class _VersionedBatchReader(DataSourceReader):
 
 
 class _VersionedStreamReader(DataSourceStreamReader):
+    _what = "versioned_table stream"
+
     def __init__(self, options: dict, schema):
         self.path = _opt_path(options)
         self.schema = _arrow_schema(schema)
@@ -943,32 +804,35 @@ class _VersionedStreamReader(DataSourceStreamReader):
             )
         return {"version": head}
 
-    def partitions(self, start: dict, end: dict):
+    def _planned_range(self, start: dict, end: dict) -> tuple:
+        """The manifest and the ``(lo, hi]`` versions of one planned
+        micro-batch. Learns the cursor from every planned batch (covers
+        restart replays, where initialOffset is never called) and fails
+        loudly when the cursor is beyond the committed head (a
+        startingversion typo, not an empty stream) or predates retained
+        history (the commits it still owed were vacuumed — a silent
+        catch-up would skip them or re-deliver a compacted snapshot)."""
         vs = versions(self.path)
         lo, hi = start["version"], end["version"]
-        # learn the cursor from every planned batch (covers restart
-        # replays, where initialOffset is never called)
         if self._cursor is None or hi > self._cursor:
             self._cursor = hi
         if lo > 0 and vs and lo > vs[-1]["version"]:
-            # a startingversion beyond the committed head is a typo,
-            # not an empty stream — fail loudly at first plan
             raise ValueError(
-                f"versioned_table stream at {self.path}: cursor {lo} is "
-                f"beyond the committed head {vs[-1]['version']} — check "
-                "startingversion"
+                f"{self._what} at {self.path}: cursor {lo} is beyond the "
+                f"committed head {vs[-1]['version']} — check startingversion"
             )
         if lo > 0 and vs and lo < vs[0]["version"]:
-            # the checkpointed cursor predates retained history: the
-            # commits it still owed were vacuumed — a silent catch-up
-            # would skip them (or re-deliver a compacted snapshot)
             raise ValueError(
-                f"versioned_table stream at {self.path}: checkpointed "
-                f"cursor {lo} no longer resolves in the manifest "
-                f"(oldest retained version is {vs[0]['version']}) — "
-                "the chain was compacted/expired; resync the consumer "
-                "from the current snapshot with a fresh checkpoint"
+                f"{self._what} at {self.path}: checkpointed cursor {lo} no "
+                "longer resolves in the manifest (oldest retained version "
+                f"is {vs[0]['version']}) — the chain was compacted/expired; "
+                "resync the consumer from the current snapshot with a "
+                "fresh checkpoint"
             )
+        return vs, lo, hi
+
+    def partitions(self, start: dict, end: dict):
+        vs, lo, hi = self._planned_range(start, end)
         parts = []
         for i, e in enumerate(vs):
             if not (lo < e["version"] <= hi):
@@ -1059,6 +923,8 @@ class _VersionedCDFStreamReader(_VersionedStreamReader):
     fell through to the snapshot reader (meta columns read as NULL) —
     now it is a real source, pinned against ``incremental_scan``."""
 
+    _what = "versioned_table change-feed stream"
+
     def __init__(self, options: dict, schema):
         super().__init__(options, schema)
         if self.ignore_deletes or self.ignore_changes:
@@ -1069,77 +935,69 @@ class _VersionedCDFStreamReader(_VersionedStreamReader):
             )
 
     def partitions(self, start: dict, end: dict):
-        vs = versions(self.path)
-        lo, hi = start["version"], end["version"]
-        if self._cursor is None or hi > self._cursor:
-            self._cursor = hi
-        if lo > 0 and vs and lo > vs[-1]["version"]:
-            raise ValueError(
-                f"versioned_table change-feed stream at {self.path}: "
-                f"cursor {lo} is beyond the committed head "
-                f"{vs[-1]['version']} — check startingversion"
-            )
-        if lo > 0 and vs and lo < vs[0]["version"]:
-            raise ValueError(
-                f"versioned_table change-feed stream at {self.path}: "
-                f"checkpointed cursor {lo} no longer resolves in the "
-                f"manifest (oldest retained version is "
-                f"{vs[0]['version']}) — the chain was compacted/"
-                "expired; resync from the current snapshot"
-            )
-        change_of = {
-            "delete": "delete",
-            "replace": "upsert",
-            "append": "insert",
-            "full": "insert",  # only ever the fresh-stream leading base
-        }
-        parts = []
-        for i, e in enumerate(vs):
-            if not (lo < e["version"] <= hi):
-                continue
-            m = _mode(e)
-            if m in ("rename", "drop"):
-                continue  # metadata-only: no change rows
-            if m == "full" and (lo > 0 or e["version"] != vs[0]["version"]):
+        vs, lo, hi = self._planned_range(start, end)
+        for e in vs:
+            if (
+                lo < e["version"] <= hi
+                and _mode(e) == "full"
+                and (lo > 0 or e["version"] != vs[0]["version"])
+            ):
                 raise ValueError(
-                    f"versioned_table change-feed stream at {self.path}: "
-                    f"version {e['version']} is a full-snapshot rewrite — "
-                    "incremental lineage is broken; resync the consumer "
-                    "from it (startingversion names it)"
+                    f"{self._what} at {self.path}: version {e['version']} "
+                    "is a full-snapshot rewrite — incremental lineage is "
+                    "broken; resync the consumer from it (startingversion "
+                    "names it)"
                 )
-            smap = _compose_schema_map(vs[i + 1 :])
-            renames = tuple(
-                sorted((k, v) for k, v in smap.items() if v is not None)
-            )
-            drops = tuple(sorted(k for k, v in smap.items() if v is None))
-            for f, pvals in _data_files_with_parts(self.path, e):
-                parts.append(
-                    InputPartition(
-                        (f, pvals, renames, drops, change_of[m], e["version"])
-                    )
-                )
-        return parts or [InputPartition(None)]
+        # names as of NOW: the declared stream schema is current
+        return _change_partitions(self.path, vs, lo, hi)
 
     def read(self, partition) -> Iterator:
-        import pyarrow as pa
+        return _read_change_rows(self.schema, partition)
 
-        if partition is None or partition.value is None:
-            return
-        f, pvals, renames, drops, change, version = partition.value
-        data_schema = pa.schema(
-            [
-                fld
-                for fld in self.schema
-                if fld.name not in ("_change_type", "_commit_version")
-            ]
-        )
-        for b in _read_file_batches(f, data_schema, (), pvals, renames, drops):
-            n = b.num_rows
-            arrays = list(b.columns) + [
-                pa.array([change] * n, pa.string()),
-                pa.array([version] * n, pa.int64()),
-            ]
-            yield pa.RecordBatch.from_arrays(arrays, schema=self.schema)
+
+def _change_partitions(path: str, scope: list, lo: int, hi: int) -> list:
+    """The change-feed partitions (batch and stream): one per data file
+    of every data commit in ``scope`` with a version in ``(lo, hi]``,
+    carrying its change type and version, with its at-commit names
+    mapped through the rename/drop commits after it in ``scope``.
+    Spark needs at least one partition, so an empty range yields one
+    no-op partition."""
+    parts = []
+    for i, e in enumerate(scope):
+        m = _mode(e)
+        if not lo < e["version"] <= hi or m in ("rename", "drop"):
+            continue  # metadata-only commits carry no change rows
+        smap = _compose_schema_map(scope[i + 1 :])
+        renames = tuple(sorted((k, v) for k, v in smap.items() if v is not None))
+        drops = tuple(sorted(k for k, v in smap.items() if v is None))
+        for f, pvals in _data_files_with_parts(path, e):
+            parts.append(
+                InputPartition(
+                    (f, pvals, renames, drops, _CHANGE_TYPE[m], e["version"])
+                )
+            )
+    return parts or [InputPartition(None)]
+
+
+def _read_change_rows(schema, partition) -> Iterator:
+    """One change-feed partition's rows: the file's data columns
+    reconciled to ``schema`` (delete commits' key-only rows null-fill
+    like any pre-evolution file), stamped ``_change_type`` and
+    ``_commit_version``."""
+    import pyarrow as pa
+
+    if partition is None or partition.value is None:
+        return
+    f, pvals, renames, drops, change, version = partition.value
+    meta = ("_change_type", "_commit_version")
+    data_schema = pa.schema([fld for fld in schema if fld.name not in meta])
+    for b in _read_file_batches(f, data_schema, (), pvals, renames, drops):
+        n = b.num_rows
+        arrays = list(b.columns) + [
+            pa.array([change] * n, pa.string()),
+            pa.array([version] * n, pa.int64()),
+        ]
+        yield pa.RecordBatch.from_arrays(arrays, schema=schema)
 
 
 class _StagedParts(WriterCommitMessage):
@@ -1517,53 +1375,13 @@ class _VersionedCDFReader(DataSourceReader):
                 f"rewrite(s) {rewrites}: incremental lineage is broken — "
                 "resync from the rewrite"
             )
-        change_of = {
-            "delete": "delete",
-            "replace": "upsert",
-            "append": "insert",
-            "full": "insert",  # only ever the leading base (start=0)
-        }
-        parts = []
-        for j, e in enumerate(rng):
-            m = _mode(e)
-            if m in ("rename", "drop"):
-                continue  # metadata-only: no change rows
-            smap = _compose_schema_map(rng[j + 1 :])
-            renames = tuple(
-                sorted((k, v) for k, v in smap.items() if v is not None)
-            )
-            drops = tuple(sorted(k for k, v in smap.items() if v is None))
-            for f, pvals in _data_files_with_parts(self.path, e):
-                parts.append(
-                    InputPartition(
-                        (f, pvals, renames, drops, change_of[m], e["version"])
-                    )
-                )
-        # an empty (caught-up) range still needs one no-op partition
-        return parts or [InputPartition(None)]
+        # names as of the window's END
+        return _change_partitions(
+            self.path, rng, self.start, end_e["version"]
+        )
 
     def read(self, partition) -> Iterator:
-        import pyarrow as pa
-
-        if partition is None or partition.value is None:
-            return
-        f, pvals, renames, drops, change, version = partition.value
-        data_schema = pa.schema(
-            [
-                fld
-                for fld in self.schema
-                if fld.name not in ("_change_type", "_commit_version")
-            ]
-        )
-        for b in _read_file_batches(f, data_schema, (), pvals, renames, drops):
-            n = b.num_rows
-            arrays = list(b.columns) + [
-                pa.array([change] * n, pa.string()),
-                pa.array([version] * n, pa.int64()),
-            ]
-            yield pa.RecordBatch.from_arrays(
-                arrays, schema=self.schema
-            )
+        return _read_change_rows(self.schema, partition)
 
 
 class VersionedTableDataSource(DataSource):
@@ -1649,4 +1467,9 @@ def register(spark) -> None:
     # the pruned plan; a reader that implements pushFilters with the
     # flag off is an analysis error, so this is required, not tuning
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    # registering captures the worker env and includes: ship first, so
+    # the planner and streaming-source runners can unpickle this module
+    from ..session import ship_package
+
+    ship_package(spark)
     spark.dataSource.register(VersionedTableDataSource)

@@ -1,6 +1,7 @@
 """Run the stress budgets that the default test run cuts.
 
 The model-based commit-sequence properties (tests/test_versioned.py),
+the skip-rule soundness property (tests/test_versioned_skipping.py),
 the scalar-function properties (tests/test_scalar_properties.py) and
 the scale matrix (tests/test_scale.py) run a reduced number of examples
 or configurations by default; ``SPARK_GRAFT_STRESS=1`` restores the full
@@ -29,6 +30,7 @@ import xml.etree.ElementTree as ET
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 SUITES = [
     "tests/test_versioned.py",
+    "tests/test_versioned_skipping.py",
     "tests/test_scale.py",
     "tests/test_scalar_properties.py",
 ]
