@@ -700,21 +700,16 @@ def _common(rec, value):
 
 
 def _may_match(lo, hi, op: str, value) -> bool:
-    """The one data-skipping rule of the versioned table — for commit
-    stats, per-file stats and hive partition dirs, for library and
-    format reads: can a commit, file or dir whose recorded values of a
-    column lie in ``[lo, hi]`` hold a row where ``column <op> value``?
-    ``op`` is ``=``, ``>``, ``>=``, ``<``, ``<=`` or ``in`` (``value``
-    is then the list). A dir records ``lo == hi == raw``; ``(None,
-    None)`` — all-NULL stats, the NULL partition — matches no
-    comparison. Each bound is parsed into the predicate value's type
-    (``_common``) and compared; a bound that does not parse, or a NaN
-    on either side (Spark orders NaN above every value), keeps the
-    range. A string value on a string range may also stand for the
-    number or instant Spark casts it to on a numeric or temporal
-    column, so the range is kept when any such reading matches.
-    Pruning is a performance fact, never a correctness input: every
-    reader re-applies the predicate to the rows it reads."""
+    """The comparison of the versioned table's one data-skipping rule
+    (``_keeps``): can a commit, file or hive partition dir whose
+    recorded values of a column lie in ``[lo, hi]`` hold a row where
+    ``column <op> value``? ``op`` is ``=``, ``>``, ``>=``, ``<``,
+    ``<=`` or ``in`` (``value`` is then the list). A dir records
+    ``lo == hi == raw``; ``(None, None)`` — all-NULL stats, the NULL
+    partition — matches no comparison. Each bound is parsed into the
+    predicate value's type (``_common``) and compared; a bound that
+    does not parse, or a NaN on either side (Spark orders NaN above
+    every value), keeps the range."""
     if op == "in":
         return any(_may_match(lo, hi, "=", v) for v in value)
     if lo is None or hi is None:
@@ -725,31 +720,57 @@ def _may_match(lo, hi, op: str, value) -> bool:
     r_lo, r_hi, v = a[0], b[1], a[2]
     if r_lo != r_lo or r_hi != r_hi or v != v:
         return True
-    hit = {
+    return {
         "=": r_lo <= v <= r_hi,
         ">": r_hi > v,
         ">=": r_hi >= v,
         "<": r_lo < v,
         "<=": r_lo <= v,
     }[op]
-    if hit or not all(isinstance(x, str) for x in (lo, hi, value)):
-        return hit
-    inst = _instant(value)
-    day = inst and (inst[0].date() if inst[1] else inst[0])
-    return any(
-        alt is not None
-        and _common(lo, alt) is not None
-        and _common(hi, alt) is not None
-        and _may_match(lo, hi, op, alt)
-        for alt in (_number(value), day)
-    )
+
+
+def _as_instant(v):
+    """An ISO string as the date (date-only form) or datetime Spark
+    casts it to, or None when it is not one."""
+    inst = _instant(v)
+    return inst and (inst[0].date() if inst[1] else inst[0])
+
+
+def _readings(preds) -> list:
+    """``preds`` under each type their string values may stand for,
+    all values at once: as strings, as numbers, as dates/times. A
+    column has one type and Spark casts every literal compared with it
+    to that type, so one of these readings is the column's. A reading
+    in which some string value does not parse is left out."""
+
+    def values(op, v):
+        return list(v) if op == "in" else [v]
+
+    strs = [x for op, v in preds for x in values(op, v) if isinstance(x, str)]
+    out = [preds]
+    for conv in (_number, _as_instant) if strs else ():
+        if any(conv(x) is None for x in strs):
+            continue
+        typed = [
+            (op, [conv(x) if isinstance(x, str) else x for x in values(op, v)])
+            for op, v in preds
+        ]
+        out.append([(op, xs if op == "in" else xs[0]) for op, xs in typed])
+    return out
 
 
 def _keeps(st: dict | None, preds) -> bool:
-    """``_may_match`` over a recorded ``{min, max}`` (None: not
-    recorded, so kept) for every ``(op, value)`` of ``preds``."""
-    return st is None or all(
-        _may_match(st["min"], st["max"], op, v) for op, v in preds
+    """The one data-skipping rule of the versioned table — for commit
+    stats, per-file stats and hive partition dirs, for library and
+    format reads: can a range with recorded ``{min, max}`` (None: not
+    recorded, so kept) hold a row matching every ``(op, value)`` of
+    ``preds``? It can when, under one of ``_readings(preds)``, each
+    ``_may_match``. Pruning is a performance fact, never a correctness
+    input: every reader re-applies the predicate to the rows it
+    reads."""
+    return st is None or any(
+        all(_may_match(st["min"], st["max"], op, v) for op, v in typed)
+        for typed in _readings(preds)
     )
 
 
@@ -1635,11 +1656,13 @@ def read_version(
     safe (the pruned column IS the tombstone key and the ranges are
     disjoint); otherwise they are always applied. Bounds keep their
     Python type: every skip — commit stats, file stats, partition dirs
-    — is one ``_may_match`` call (the rule the format reader shares),
+    — is one ``_keeps`` call (the rule the format reader shares),
     which parses each recorded value into the bound's type, so
     ``date``/``datetime``/``Decimal`` bounds compare by value
     (``Decimal("9.00")`` is below ``12.00``), and a bound that does not
     parse against a recorded value keeps the commit, file or dir.
+    String bounds are read under one shared type at a time (string,
+    number or date/time — ``_readings``), as Spark casts both.
 
     ``as_of`` is TIMESTAMP AS OF (Delta's timestampAsOf): epoch
     seconds or a datetime (naive = UTC), resolved to the latest commit
@@ -1786,7 +1809,7 @@ def incremental_scan(
     touch the slice); on any other column they are delivered whole —
     an upsert may move a row INTO or OUT OF the range, and the
     consumer needs the key either way. Bounds compare by value through
-    ``_may_match``, as in ``read_version``."""
+    ``_keeps``, as in ``read_version``."""
     from pyspark.sql import functions as F
 
     preds = () if prune is None else ((">=", prune[1]), ("<=", prune[2]))

@@ -11,7 +11,7 @@ same manifest protocol as a *format*, so ANY Spark pipeline can say
 - **Batch read**: the pinned (or latest) version, chain-resolved in
   EXECUTORS — one input partition per committed data file. Pushed
   comparison filters skip files by their hive dir and per-file stats
-  through the library's one rule (``_may_match``: each recorded value
+  through the library's one rule (``_keeps``: each recorded value
   parsed into the filter value's type). Tombstone
   commits ship as FILE PATHS in the partition (never materialized on
   the driver), loaded executor-side and applied as a vectorized Arrow
@@ -62,7 +62,7 @@ column the written schema lacks gets no stat, an all-NULL one
 columns — tasks dynamic-partition their Arrow batches into hive
 subdirs and the manifest records ``partition_by``/``partition_dirs``
 exactly as the library writer does, so format-written tables prune
-partition dirs on read, by the same ``_may_match`` rule as
+partition dirs on read, by the same ``_keeps`` rule as
 ``read_version``), ``maxversionspertrigger`` (stream: cap each
 micro-batch AFTER the first of a run at N committed versions —
 Delta's maxFilesPerTrigger analog at commit granularity, bounding
@@ -144,7 +144,8 @@ from .versioned import (
     versions,
 )
 
-# the pushed filter classes ``_may_match`` decides on, by its op name
+# the pushed filter classes the skipping rule (``_keeps``) decides on,
+# by its op name
 _FILTER_OPS = {
     EqualTo: "=",
     GreaterThan: ">",
@@ -570,7 +571,7 @@ class _VersionedBatchReader(DataSourceReader):
         """Data skipping through the format: each comparison filter on
         one column is RECORDED once as ``(column, op, value)`` for
         ``partitions()``, which skips partition dirs and files by
-        ``_may_match`` (the library's rule), but ALL filters are
+        ``_keeps`` (the library's rule), but ALL filters are
         returned to Spark (it re-applies them post-scan), so pruning
         can only skip files, never change results. At 100 TB a
         ``WHERE day = X`` through the format then opens one partition

@@ -1484,35 +1484,43 @@ def test_stat_value_normalizes_tz_aware_timestamps():
 
 
 def test_partition_dir_overlap_temporal_forms():
-    """Hive timestamp dirs use a space separator; `_may_match` parses
-    them (lexicographic would mis-order ' ' vs 'T'), and a DATE dir
-    covers its whole day against timestamp bounds."""
+    """Hive timestamp dirs use a space separator; the skipping rule
+    (`_keeps`) parses them (lexicographic would mis-order ' ' vs 'T'),
+    and a DATE dir covers its whole day against timestamp bounds."""
     import datetime
 
     def f(rel_dir, col, lo, hi):
-        raw = V._partition_value(rel_dir, col)
-        return V._may_match(raw, raw, ">=", lo) and V._may_match(raw, raw, "<=", hi)
+        rec = V._hive_stat(V._partition_value(rel_dir, col))
+        return V._keeps(rec, ((">=", lo), ("<=", hi)))
 
-    d, ts = datetime.date, datetime.datetime
     # date dirs vs date bounds
-    assert f("day=2020-06-03", "day", d(2020, 6, 3), d(2020, 6, 4))
-    assert not f("day=2020-06-02", "day", d(2020, 6, 3), d(2020, 6, 4))
-    # timestamp dir with space separator vs timestamp bounds: 10:00 is
+    assert f("day=2020-06-03", "day", "2020-06-03", "2020-06-04")
+    assert not f("day=2020-06-02", "day", "2020-06-03", "2020-06-04")
+    # timestamp dir with space separator vs 'T'-form bounds: 10:00 is
     # inside [09:00, 11:00] even though ' ' < 'T' lexicographically
     assert f(
         "ts=2020-06-01 10%3A00%3A00".replace("%3A", ":"),
         "ts",
-        ts(2020, 6, 1, 9),
-        ts(2020, 6, 1, 11),
+        "2020-06-01T09:00:00",
+        "2020-06-01T11:00:00",
     )
     assert not f(
-        "ts=2020-06-01 12:00:00", "ts", ts(2020, 6, 1, 9), ts(2020, 6, 1, 11)
+        "ts=2020-06-01 12:00:00", "ts", "2020-06-01T09:00:00", "2020-06-01T11:00:00"
     )
     # a date dir is NOT prunable by a mid-day timestamp range within it
-    assert f("day=2020-06-01", "day", ts(2020, 6, 1, 10), ts(2020, 6, 1, 11))
+    assert f("day=2020-06-01", "day", "2020-06-01T10:00:00", "2020-06-01T11:00:00")
     # plain strings still compare as strings
     assert f("r=ASIA", "r", "AFRICA", "EUROPE")
     assert not f("r=MIDEAST", "r", "AFRICA", "EUROPE")
+    # the same dirs against typed date/datetime bounds
+    d, ts = datetime.date, datetime.datetime
+    assert f("day=2020-06-03", "day", d(2020, 6, 3), d(2020, 6, 4))
+    assert not f("day=2020-06-02", "day", d(2020, 6, 3), d(2020, 6, 4))
+    assert f("ts=2020-06-01 10:00:00", "ts", ts(2020, 6, 1, 9), ts(2020, 6, 1, 11))
+    assert not f(
+        "ts=2020-06-01 12:00:00", "ts", ts(2020, 6, 1, 9), ts(2020, 6, 1, 11)
+    )
+    assert f("day=2020-06-01", "day", ts(2020, 6, 1, 10), ts(2020, 6, 1, 11))
 
 
 def test_drop_column_metadata_only_commit(spark, tmp_path):

@@ -1,9 +1,9 @@
-"""The versioned table's one data-skipping rule, ``_may_match``: a
-commit, file or partition dir is skipped only when no row its recorded
-[min, max] allows can satisfy the predicate. Library reads
-(``read_version``/``incremental_scan`` ``prune=``) and format reads
-(pushed filters) all decide through it, so a skip can never lose rows
-that ``df.where`` on the source keeps.
+"""The versioned table's one data-skipping rule, ``_keeps`` over
+``_may_match``: a commit, file or partition dir is skipped only when
+no row its recorded [min, max] allows can satisfy the predicates.
+Library reads (``read_version``/``incremental_scan`` ``prune=``) and
+format reads (pushed filters) all decide through it, so a skip can
+never lose rows that ``df.where`` on the source keeps.
 """
 
 from __future__ import annotations
@@ -86,6 +86,7 @@ _TYPES = {
     "aware_ts": (st.datetimes(**_TS, timezones=_ZONES),) * 2,
     "mixed_ts": (st.datetimes(**_TS), st.datetimes(**_TS, timezones=_ZONES)),
     "date_vs_ts": (st.dates(), st.datetimes(**_TS)),
+    "ts_vs_date": (st.datetimes(**_TS), st.dates()),
     "str": (
         st.one_of(
             st.text(max_size=6),
@@ -138,10 +139,94 @@ def test_may_match_never_skips_a_matching_range(case):
             assert not V._may_match(rec["min"], rec["max"], op, value)
 
 
-def test_may_match_skips_by_value():
+def _as_string(v):
+    """A typed predicate value as the string literal Spark casts back
+    to it on a column of its type (a user's ``prune=`` bound may be
+    either)."""
+    if isinstance(v, tuple):
+        return tuple(_as_string(x) for x in v)
+    s = V._stat_value(v)
+    return s if isinstance(s, str) else str(v).lower()
+
+
+def _shift(v, n):
+    """``v`` moved ``n`` small steps (hours for a timestamp, days for a
+    date), so a predicate value lands next to a recorded one."""
+    if isinstance(v, (bool, str)):
+        return v
+    if isinstance(v, datetime.date):
+        hours = 1 if isinstance(v, datetime.datetime) else 24
+        try:
+            return v + datetime.timedelta(hours=n * hours)
+        except OverflowError:  # next to date.min or date.max
+            return v
+    return v + n
+
+
+@st.composite
+def _pred_sets(draw):
+    """Recorded values and one or two predicates on them (a library
+    ``prune=`` is two), each value typed or as its string literal.
+    Predicate values are often drawn next to a recorded value (same
+    day, nearby number), where string and typed orders part."""
+    name = draw(st.sampled_from(sorted(_TYPES)))
+    data_st, pred_st = _TYPES[name]
+    vals = draw(st.lists(st.one_of(st.none(), data_st), min_size=1, max_size=4))
+    near = [v for v in vals if v is not None]
+    if near and data_st is pred_st:
+        pred_st = st.one_of(
+            pred_st,
+            st.builds(_shift, st.sampled_from(near), st.integers(-3, 3)),
+        )
+    preds = []
+    for _ in range(draw(st.integers(1, 2))):
+        op = draw(st.sampled_from(OPS + ("in",)))
+        if op == "in":
+            value = tuple(draw(st.lists(pred_st, min_size=1, max_size=3)))
+        else:
+            value = draw(pred_st)
+        preds.append((op, value))
+    as_str = draw(st.booleans())
+    given_preds = [(op, _as_string(v)) for op, v in preds] if as_str else preds
+    return vals, preds, given_preds
+
+
+@settings(
+    max_examples=20000 if os.environ.get("SPARK_GRAFT_STRESS") else 500,
+    deadline=None,
+)
+@given(_pred_sets())
+def test_keeps_never_skips_a_matching_range(case):
+    """Soundness of the rule over predicate sets: a recorded range (as
+    above, and a timestamp dir as Spark's writer names it, with a space
+    separator) is kept when a value inside it satisfies every
+    predicate, whether the predicate values are typed or their string
+    literals."""
+    vals, preds, given_preds = case
+
+    def hit(v):
+        return v is not None and all(_satisfies(v, op, x) for op, x in preds)
+
+    stats = {
+        "min": _recorded(V._bound(min, vals)),
+        "max": _recorded(V._bound(max, vals)),
+    }
+    if any(hit(v) for v in vals):
+        assert V._keeps(stats, given_preds), (stats, given_preds)
+    for v in filter(hit, vals):
+        forms = [_hive_dir_value(v)]
+        if isinstance(v, datetime.datetime) and v.tzinfo is None:
+            forms.append(str(v))
+        for raw in forms:
+            rec = V._hive_stat(V._partition_value(f"c={raw}", "c"))
+            assert V._keeps(rec, given_preds), (rec, given_preds)
+
+
+def test_rule_skips_by_value():
     """The rule still skips: decimals order as numbers, not strings;
     all-NULL ranges and the NULL partition match no comparison; string
-    bounds on numeric stats compare as the number Spark casts them to."""
+    bounds are read under one type at a time, so they prune as the
+    value Spark casts them to."""
     m = V._may_match
     assert not m("5.00", "9.00", ">", D("9.00"))
     assert not m("10.50", "12.00", "<=", D("10.00"))
@@ -152,10 +237,20 @@ def test_may_match_skips_by_value():
     assert m(1, 10, ">=", "1")
     assert not m("2020-06-02", "2020-06-02", "=", datetime.date(2020, 6, 3))
     # a string bound keeps a timestamp range Spark's cast would match
-    assert m("2000-01-01T00:00:00", "2000-01-05T00:00:00", "<=", "2000-01-01")
-    assert not m(
-        "2001-01-01T00:00:00", "2001-12-31T00:00:00", "<=", "2000-12-31T23:59:59"
-    )
+    k = V._keeps
+    ts_range = {"min": "2000-01-01T00:00:00", "max": "2000-01-05T00:00:00"}
+    assert k(ts_range, (("<=", "2000-01-01"),))
+    assert not k(ts_range, (("<=", "1999-12-31T23:59:59"),))
+    # both bounds under one reading: a space-separated dir outside
+    # ['T'-form] bounds is skipped, though each bound alone matches it
+    # under some reading
+    dir12 = V._hive_stat("2020-06-01 12:00:00")
+    bounds = ((">=", "2020-06-01T09:00:00"), ("<=", "2020-06-01T11:00:00"))
+    assert not k(dir12, bounds)
+    assert all(k(dir12, (b,)) for b in bounds)
+    # decimal strings order as numbers under the numeric reading
+    assert k({"min": "5.00", "max": "12.00"}, ((">=", "9.00"), ("<=", "10.00")))
+    assert not k({"min": "10.50", "max": "12.00"}, (("<=", "10.00"),))
 
 
 # --------------------------------------------- Spark: reads lose no rows

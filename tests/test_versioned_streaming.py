@@ -213,33 +213,48 @@ def test_sink_max_chain_auto_compacts(spark, tmp_path):
     )
 
 
-def test_cdf_stream_query_runs_without_pythonpath(tmp_path):
-    """`versioned_cdf_stream_sync` from a fresh process with no
-    PYTHONPATH and a working directory outside the repo — the driver
-    harness's setup. The data source's planner and streaming-source
-    runners must import this package from what `ship_package` sent
-    them: they raised ModuleNotFoundError while the source was
-    registered before the package was shipped, and the streaming-source
-    runner, which ignores addPyFile, also needs it on PYTHONPATH."""
+def test_cdf_stream_query_runs_without_pythonpath(spark, tmp_path):
+    """One change-feed micro-batch of ``readStream.format(
+    "versioned_table")`` from a fresh process with no PYTHONPATH and a
+    working directory outside the repo — the driver harness's setup.
+    The data source's planner and streaming-source runners must import
+    this package from what ``ship_package`` sent them: they raised
+    ModuleNotFoundError while the source was registered before the
+    package was shipped, and the streaming-source runner, which ignores
+    addPyFile, also needs it on PYTHONPATH."""
     import subprocess
     import sys
 
-    from conftest import SF_SMOKE
-
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    table = str(tmp_path / "t")
+    V.write_version(spark.range(3).withColumnRenamed("id", "x"), table)
     script = f"""
 import sys
 sys.path.insert(0, {repo!r})
 from pyspark.sql import SparkSession
-spark = SparkSession.builder.master("local[2]").getOrCreate()
-from end_to_end_database_pipeline_project_spark.plans.source_queries import (
-    versioned_cdf_stream_sync,
+spark = (
+    SparkSession.builder.master("local[1]")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
 )
-rows = versioned_cdf_stream_sync(spark, {SF_SMOKE!r}).collect()
-print("ROWS=" + str(len(rows)))
+from end_to_end_database_pipeline_project_spark.sources.versioned_source import (
+    register,
+)
+register(spark)
+q = (
+    spark.readStream.format("versioned_table")
+    .option("path", {table!r})
+    .option("readchangefeed", "true")
+    .load()
+    .writeStream.format("noop")
+    .option("checkpointLocation", {str(tmp_path / "ckpt")!r})
+    .trigger(availableNow=True)
+    .start()
+)
+q.awaitTermination()
+print("ROWS=" + str(sum(p["numInputRows"] for p in q.recentProgress)))
 """
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["SPARK_GRAFT_ARTIFACT_DIR"] = str(tmp_path)
     proc = subprocess.run(
         [sys.executable, "-c", script],
         cwd=str(tmp_path),
@@ -249,4 +264,4 @@ print("ROWS=" + str(len(rows)))
         timeout=300,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
-    assert "ROWS=1" in proc.stdout
+    assert "ROWS=3" in proc.stdout
